@@ -6,10 +6,12 @@ Elastic_indexing.py:257-258`` and cosine_similarity usage
 
 Two paths:
 
-- **brute-force cosine top-k** — the exactness baseline. Query set is
-  broadcast (top-k queries are usually few); the corpus never shuffles.
-  Dot products run as codegen'd higher-order functions (zip_with +
-  aggregate) on double arrays — no Python in the loop.
+- **brute-force cosine top-k** — the exactness baseline. The query set
+  is collected once (top-k queries are usually few); the corpus never
+  shuffles before the final k-rows-per-query window. Dot products and
+  norms run in one Arrow/NumPy kernel per corpus batch, as a sequential
+  left fold over the dimensions (the operation order of ``dot`` and
+  ``l2_norm``), vectorized across every (query, corpus row) pair.
 - **LSH-bucketed top-k (random hyperplanes)** — the scale path: corpus
   and queries are hashed to sign-pattern buckets; only same-bucket pairs
   are scored. Recall < 1 by design; multi-probe (flip one bit) trades
@@ -43,7 +45,6 @@ __all__ = [
     "lattice_cosine_admit",
     "lattice_sim",
     "cosine_topk",
-    "cosine_topk_pandas",
     "knn_vote",
     "int8_quantize",
     "cosine_near_pairs",
@@ -177,31 +178,9 @@ def as_double(col: Column | str) -> Column:
 def dot(a: Column, b: Column) -> Column:
     """Sequential left-fold dot product — deterministic accumulation order.
 
-    Interpreted (F.aggregate is not codegen'd): reserved for the
-    oracle-checked exact paths where bit-stable accumulation order is the
-    contract. Hot candidate-verify paths use ``pair_dot_pandas``."""
+    Interpreted (F.aggregate is not codegen'd) and evaluated per pair:
+    ``cosine_topk`` runs the same fold vectorized in NumPy instead."""
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def pair_dot_pandas(a: Column, b: Column) -> Column:
-    """Arrow-batched NumPy dot product per row pair — the vectorized twin
-    of ``dot`` for candidate-verify joins (measured ~10× on the bucketed
-    embedding dedup at the 10× synthetic SF). float64 einsum may differ
-    from the sequential fold in the last ulp, so oracle-checked exact
-    operators keep ``dot``; verify paths filter on thresholds where an
-    ulp is immaterial."""
-    import numpy as np
-    import pandas as pd
-
-    @F.pandas_udf("double")
-    def _pair_dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if not len(va):
-            return pd.Series([], dtype="float64")
-        A = np.stack(va.to_numpy())
-        B = np.stack(vb.to_numpy())
-        return pd.Series(np.einsum("ij,ij->i", A, B))
-
-    return _pair_dot(a, b)
 
 
 def l2_norm(a: Column) -> Column:
@@ -444,6 +423,73 @@ def lattice_sim(d: Column, na: Column, nb: Column) -> Column:
     )
 
 
+# Query rows × corpus rows per cosine_topk kernel block: caps each of the
+# block's float64 temporaries at 8 MB per Python worker.
+_TOPK_BLOCK_CELLS = 1 << 20
+
+
+def _fold_matrix(vecs) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """A list<double> Arrow column as ``(m, lens, clean, norms)``:
+    ``m[j, i]`` is element j of row i, zero-padded to the longest row (a
+    +0.0 term leaves a fold from 0.0 bit-unchanged); ``clean`` marks rows
+    with no NULL and no NULL element; ``norms`` is ``l2_norm`` as the same
+    left fold of x*x, NaN where Spark's is NULL."""
+    n = len(vecs)
+    lens = vecs.value_lengths().fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
+    flat = vecs.flatten()
+    rows = np.repeat(np.arange(n), lens)
+    pos = np.arange(len(flat)) - np.repeat(np.cumsum(lens) - lens, lens)
+    holes = np.bincount(rows[flat.is_null().to_numpy(zero_copy_only=False)], minlength=n)
+    clean = vecs.is_valid().to_numpy(zero_copy_only=False) & (holes == 0)
+    keep = clean[rows]
+    m = np.zeros((int(lens.max(initial=0)), n))
+    m[pos[keep], rows[keep]] = flat.to_numpy(zero_copy_only=False)[keep]
+    acc = np.zeros(n)
+    for row in m:
+        acc += row * row
+    return m, lens, clean, np.where(clean, np.sqrt(acc), np.nan)
+
+
+def _topk_kernel(batches, qids, qm, qlens, qclean, qn, k: int):
+    """``mapInArrow`` body of ``cosine_topk``. Per corpus batch and query
+    it emits every row whose sim is not finite (NULL fold, zero norm,
+    NaN) and every row whose unrounded sim is within 2e-6 of the batch's
+    k-th best: ``round(…, 6)`` moves a sim by at most 5e-7, so any row
+    further below ranks behind k rows under (rounded sim desc,
+    neighbor_id asc), and the output is a superset of the local top k."""
+    import pyarrow as pa
+
+    qid_np = qids.to_numpy(zero_copy_only=False)
+    for b in batches:
+        b = b.filter(b.column(0).is_valid())
+        if not b.num_rows or not len(qids):
+            continue
+        cids, n = b.column(0), b.num_rows
+        cid_np = cids.to_numpy(zero_copy_only=False)
+        cm, clens, cclean, cn = _fold_matrix(b.column(1))
+        step, kk = max(1, _TOPK_BLOCK_CELLS // n), min(max(k, 1), n)
+        acc, prod = np.empty((min(step, len(qids)), n)), np.empty((min(step, len(qids)), n))
+        for lo in range(0, len(qids), step):
+            hi = min(lo + step, len(qids))
+            dot = acc[: hi - lo]
+            dot.fill(0.0)
+            for j in range(min(len(qm), len(cm))):  # dot()'s left fold, per pair
+                np.multiply(qm[j, lo:hi, None], cm[j], out=prod[: hi - lo])
+                dot += prod[: hi - lo]
+            has_dot = qclean[lo:hi, None] & cclean & (qlens[lo:hi, None] == clens)
+            with np.errstate(all="ignore"):
+                sim = np.where(has_dot, dot, np.nan) / (qn[lo:hi, None] * cn)
+            pair, finite = qid_np[lo:hi, None] != cid_np, np.isfinite(sim)
+            best = np.where(finite & pair, sim, -np.inf)
+            kth = np.partition(best, -kk, axis=1)[:, -kk, None]
+            qi, ci = np.nonzero(pair & np.where(finite, best >= kth - 2e-6, True))
+            yield pa.RecordBatch.from_arrays(
+                [qids.take(qi + lo), cids.take(ci), pa.array(dot[qi, ci], mask=~has_dot[qi, ci]),
+                 pa.array(qn[qi + lo], mask=~qclean[qi + lo]), pa.array(cn[ci], mask=~cclean[ci])],
+                names=["query_id", "neighbor_id", "dot", "qn", "cn"],
+            )
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -452,23 +498,38 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Brute-force cosine top-k: for each query vector, the k nearest
-    corpus vectors (excluding itself). Queries broadcast; per-query ranking
-    via window top-k (Spark plans TakeOrdered-style partial top-k before
-    the shuffle thanks to rank-filter pushdown in AQE)."""
-    # Norms are precomputed per side BEFORE the join: the naive
-    # cosine(qv, cv) evaluates three array folds per pair; this shape does
-    # one (the dot product) — the norms are O(N+Q) instead of O(N·Q).
+    corpus vectors (excluding itself), ranked by ``round(sim, 6)`` desc
+    then ``neighbor_id`` asc.
+
+    The query side is collected once as a double matrix (the bound of a
+    broadcast join). ``_topk_kernel`` scores each corpus Arrow batch
+    against it with the folds of ``dot``/``l2_norm`` in the same IEEE
+    operation order (bit-identical to them and to DuckDB's sequential
+    ``list_dot_product``) and emits only a superset of each query's
+    local top k. ``round(dot / (qn * cn), 6)`` and the ``row_number``
+    window stay in Spark SQL, so rounding, NULL ordering and the ANSI
+    divide-by-zero error are exactly those of the per-pair SQL form."""
     q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(vec_col).alias("qv")
-    ).withColumn("qn", l2_norm(F.col("qv")))
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), as_double(vec_col).alias("cv")
-    ).withColumn("cn", l2_norm(F.col("cv")))
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6))
-        .select("query_id", "neighbor_id", "sim")
+        F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>")
+    ).toArrow()
+    q = q.filter(q.column(0).is_valid())
+    qids = q.column(0).combine_chunks()
+    qm, qlens, qclean, qn = _fold_matrix(q.column(1).combine_chunks())
+    schema = (
+        f"query_id {queries.schema[id_col].dataType.simpleString()}, "
+        f"neighbor_id {corpus.schema[id_col].dataType.simpleString()}, "
+        "dot double, qn double, cn double"
     )
+    scored = corpus.select(id_col, F.col(vec_col).cast("array<double>")).mapInArrow(
+        lambda it: _topk_kernel(it, qids, qm, qlens, qclean, qn, k), schema
+    )
+    sim = F.round(F.col("dot") / (F.col("qn") * F.col("cn")), 6)
+    return _rank_topk(scored.select("query_id", "neighbor_id", sim.alias("sim")), k)
+
+
+def _rank_topk(scored: DataFrame, k: int) -> DataFrame:
+    """The top-k tail every ranking path shares: ``row_number`` per
+    query over (sim desc, neighbor_id asc), first k rows kept."""
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         scored.withColumn("rnk", F.row_number().over(w))
@@ -712,7 +773,7 @@ def embedding_near_dedup_bucketed(
     (p→1) still collide in ≥1 of 8 bands w.p. ~1. This operator is a
     DEDUP (near-identical vectors, threshold ≥ ~0.8); moderate-threshold
     similarity JOINS need band budgets LSH can't afford — use
-    ``cosine_topk_pandas``/IVF for those.
+    ``cosine_topk``/IVF for those.
 
     Scale shape: the exploded relation carries only (vec_id, band,
     bucket) — vectors are NOT replicated per band; candidate pairs join
@@ -816,12 +877,7 @@ def lsh_topk(
         .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6))
         .select("query_id", "neighbor_id", "sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return _rank_topk(scored, k)
 
 
 def ivf_train(
@@ -939,69 +995,7 @@ def ivf_topk(
         .withColumn("sim", F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6))
         .select("query_id", "neighbor_id", "sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
-
-
-def cosine_topk_pandas(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Brute-force cosine top-k on the Arrow/NumPy fast path.
-
-    Same semantics as ``cosine_topk`` but the scoring runs as a matrix
-    multiply per Arrow batch inside ``mapInPandas`` instead of interpreted
-    per-pair array folds — 10-100× less CPU per pair. The query set is
-    collected once (bounded: top-k query batches are small by
-    construction) and closed over; each executor batch emits only its
-    LOCAL top-k per query, so the final shuffle carries k rows per query
-    per batch, not the whole score matrix. Use this variant when
-    throughput matters; ``cosine_topk`` stays as the fold-based oracle
-    twin (bit-identical to the DuckDB sequential dot product)."""
-    q_rows = queries.select(id_col, vec_col).collect()
-    qids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    qm = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qm, axis=1)
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            cm = np.array([list(v) for v in pdf[vec_col]], dtype=np.float64)
-            cn = np.linalg.norm(cm, axis=1)
-            sims = np.round((qm @ cm.T) / (qn[:, None] * cn[None, :]), 6)
-            out_q, out_n, out_s = [], [], []
-            for qi in range(len(qids)):
-                s = sims[qi]
-                mask = ids != qids[qi]
-                cand = np.nonzero(mask)[0]
-                # local selection MUST use the global contract's ordering
-                # (rounded sim desc, neighbor_id asc), not batch row
-                # order — otherwise a tie straddling the local k-boundary
-                # makes output depend on partition layout
-                top = cand[np.lexsort((ids[cand], -s[cand]))[:k]]
-                out_q.extend([qids[qi]] * len(top))
-                out_n.extend(ids[top].tolist())
-                out_s.extend(s[top].tolist())
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "sim": out_s})
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, "query_id long, neighbor_id long, sim double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return _rank_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -1135,7 +1129,7 @@ def pq_topk(
     table lookups — no float vector is ever read after encoding. Per Arrow
     batch the gather is one numpy fancy-index per subspace; each batch
     emits only its LOCAL top-k per query (k rows per query per batch cross
-    the wire, same contract as cosine_topk_pandas). The query set is a
+    the wire). The query set is a
     bounded collect; the corpus never shuffles before the final
     k-rows-per-query window."""
     if books is None:
@@ -1183,12 +1177,7 @@ def pq_topk(
             yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "sim": out_s})
 
     scored = encoded.mapInPandas(score, "query_id long, neighbor_id long, sim double")
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "sim", "rnk")
-    )
+    return _rank_topk(scored, k)
 
 
 def _nearest_lattice(q: Column, cents: list[list[int]]) -> Column:
@@ -1462,6 +1451,15 @@ def knn_vote(
     `sim_knn_classify` query and its tests so the tie-break can't drift
     between the production path and its proof. ONE (query, label)
     partial agg; the rank runs on the vote table it produced."""
+    from .joins import BROADCAST_GATE_BYTES
+
+    # Broadcast labels keep the top-k window's query_id partitioning for the
+    # vote agg and its rank (left alone, Spark may broadcast the top-k side:
+    # two more exchanges). Gated on the optimizer's size estimate, which
+    # also covers cached inputs, because labels grow with the corpus.
+    size = int(str(labels._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    if size <= BROADCAST_GATE_BYTES:
+        labels = F.broadcast(labels)
     labeled = topk.join(labels, neighbor_col)
     votes = labeled.groupBy(query_col, label_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_votes")

@@ -129,15 +129,7 @@ def zvalue(
             kernel_args += [F.col(c), F.col(c).isNull()]
         ranked = ranked.withColumn("__rks__", bucket_all(*kernel_args))
         rank_cols = [F.col("__rks__").getItem(i) for i in range(n)]
-        z = F.lit(0).cast("long")
-        for bit in range(bits):
-            for i, rc in enumerate(rank_cols):
-                z = z.bitwiseOR(
-                    F.shiftleft(
-                        F.shiftright(rc, bit).bitwiseAND(F.lit(1)), bit * n + i
-                    ).cast("long")
-                )
-        return ranked.withColumn("__zval__", z).drop("__rks__")
+        helper_cols = ["__rks__"]
     else:
         from pyspark.sql import Window
 
@@ -148,6 +140,7 @@ def zvalue(
                 f"__rk_{c}", (F.percent_rank().over(w) * ((1 << bits) - 1)).cast("long")
             )
             rank_cols.append(F.col(f"__rk_{c}"))
+        helper_cols = [f"__rk_{c}" for c in cols]
     z = F.lit(0).cast("long")
     for bit in range(bits):
         for i, rc in enumerate(rank_cols):
@@ -156,7 +149,7 @@ def zvalue(
                     F.shiftright(rc, bit).bitwiseAND(F.lit(1)), bit * n + i
                 ).cast("long")
             )
-    return ranked.withColumn("__zval__", z).drop(*[f"__rk_{c}" for c in cols])
+    return ranked.withColumn("__zval__", z).drop(*helper_cols)
 
 
 def zorder_layout(
@@ -171,7 +164,13 @@ def zorder_layout(
     small hyper-rectangle in the column space) and sort within
     partitions so parquet row-group stats are tight too. Write the
     result through ``LakeTable.create``/``append`` and both the log
-    stats and the footers prune on every z-ordered column."""
+    stats and the footers prune on every z-ordered column.
+
+    ``method="approx"`` caps each column's rank at 8 bits (255 quantile
+    cutoffs; see ``zvalue``), so no column is resolved finer than 256
+    value buckets. That is ample while ``num_files`` ≪ 256; with more
+    files, neighbouring files share buckets and their min/max stats
+    prune more coarsely than ``method="window"``'s."""
     return (
         zvalue(df, cols, bits, method)
         .repartitionByRange(num_files, F.col("__zval__"))

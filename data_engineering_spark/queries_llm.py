@@ -26,7 +26,6 @@ from .operators.dedup import (
 from .operators.similarity import (
     cosine_near_pairs,
     cosine_topk,
-    cosine_topk_pandas,
     embedding_near_dedup,
     embedding_near_dedup_bucketed,
     contrastive_batches,
@@ -1515,8 +1514,8 @@ def q_corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 for the first 10 query vectors
-    (operators/similarity.py:cosine_topk — broadcast queries, fold-based
-    double dot product)."""
+    (operators/similarity.py:cosine_topk — collected queries, NumPy
+    left-fold double dot products per corpus Arrow batch)."""
     emb = _emb(spark, sf_dir)
     return cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
@@ -1675,14 +1674,12 @@ def q_sim_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
        WHERE rnk <= 5""",
 )
 def q_sim_cosine_topk_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force top-5 on the Arrow/NumPy fast path
-    (operators/similarity.py:cosine_topk_pandas) — same neighbors as
-    sim_cosine_topk, matrix-multiply scoring. Shares the exact-SQL
-    oracle: NumPy matmul and the sequential fold agree at 6 dp on this
-    data (ties broken by neighbor_id in both engines), which upgrades the
-    fast path from rows-only to hash-checked."""
+    """Brute-force top-5 on the Arrow/NumPy path. The fold kernel is now
+    the one ``cosine_topk`` (operators/similarity.py), so this is
+    sim_cosine_topk under its historical registry name, kept so the sweep
+    window does not shift; same exact-SQL oracle."""
     emb = _emb(spark, sf_dir)
-    return cosine_topk_pandas(emb, emb.filter(F.col("vec_id") < 10), k=5)
+    return cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
 
 
 # Mirrors _cell_ranker's zero-norm guard (norm 0 → divisor 1.0, sim 0):
@@ -1821,7 +1818,7 @@ def q_sim_pq_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     machinery itself: subspace slicing, encoding, LUT scoring, local
     top-k. Residual risk is the accepted ulp class (BLAS/numpy
     reductions vs sequential SQL folds inside round(·, 6) and argmin
-    near-ties), identical to sim_ivf_topk/sim_cosine_topk_fast."""
+    near-ties), identical to sim_ivf_topk."""
     from .operators.similarity import pq_train
 
     emb = _emb(spark, sf_dir)

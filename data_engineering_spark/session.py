@@ -28,6 +28,9 @@ from pyspark.sql import SparkSession
 
 __all__ = ["get_spark", "prepare_session"]
 
+# The directory holding the ``data_engineering_spark`` package.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _cpus() -> int:
     try:
@@ -71,6 +74,15 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     settable confs can be fixed up here (timezone matters for oracle
     parity, AQE for plan quality).
     """
+    # Python workers unpickle module-level functions (Arrow kernels) by
+    # reference, so they must import this package whatever directory the
+    # driver started in. Spark merges a UDF's PYTHONPATH environment
+    # entry into its worker's path; the environment is read when each
+    # UDF is built, so this must run before the first one.
+    env = spark.sparkContext.environment
+    paths = [p for p in env.get("PYTHONPATH", "").split(os.pathsep) if p]
+    if _ROOT not in paths:
+        env["PYTHONPATH"] = os.pathsep.join(paths + [_ROOT])
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Partition values stay strings (the reference's bkup_dt yyyyMMdd keys
     # are strings, BkupRs.py:234-239; inference would coerce them to int).

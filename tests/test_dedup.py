@@ -574,21 +574,154 @@ def test_ivf_topk_finds_planted_neighbor(spark):
     assert rnk1 and rnk1[0] % 4 == 0
 
 
-def test_cosine_topk_pandas_agrees_with_exact(spark, sf_dir):
-    from data_engineering_spark.catalog import load_table
-    from data_engineering_spark.operators.similarity import cosine_topk, cosine_topk_pandas
+def _per_pair_topk(corpus, queries, k):
+    """``cosine_topk`` in its per-pair SQL form — a broadcast nested-loop
+    join scoring every pair with the ``dot``/``l2_norm`` folds, then the
+    same window. The kernel must give exactly its rows and errors."""
+    from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < 5)
-    exact = {(r.query_id, r.rnk): r.neighbor_id for r in cosine_topk(emb, q, k=3).collect()}
-    fast = {(r.query_id, r.rnk): r.neighbor_id for r in cosine_topk_pandas(emb, q, k=3).collect()}
-    assert exact == fast
+    from data_engineering_spark.operators.similarity import as_double, dot, l2_norm
+
+    q = queries.select(
+        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
+    ).withColumn("qn", l2_norm(F.col("qv")))
+    c = corpus.select(
+        F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("cv")
+    ).withColumn("cn", l2_norm(F.col("cv")))
+    sim = F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
+    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
+    return (
+        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id", sim.alias("sim"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+    )
 
 
-def test_canonical_assignment_chain(spark):
+@pytest.fixture()
+def conf(spark):
+    """Set session confs for one test; the old values come back after."""
+    old = {}
+
+    def set_(key, value):
+        old.setdefault(key, spark.conf.get(key, None))
+        spark.conf.set(key, value)
+
+    yield set_
+    for key, value in old.items():
+        if value is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, value)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_topk_kernel_folds_match_python_left_fold():
+    """The kernel's dot products and norms are bit-identical to a plain
+    Python left fold from 0.0 (the op order of ``dot``/``l2_norm`` and
+    DuckDB's list_dot_product); a BLAS matmul differs in the last ulp
+    on 64-dim random data."""
+    import math
+
+    import pyarrow as pa
+
+    from data_engineering_spark.operators.similarity import _fold_matrix, _topk_kernel
+
+    def fold(a, b):
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    rng = np.random.default_rng(5)
+    q, c = rng.standard_normal((7, 64)).tolist(), rng.standard_normal((30, 64)).tolist()
+    qm, qlens, qclean, qn = _fold_matrix(pa.array(q, pa.list_(pa.float64())))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(range(100, 130)), pa.array(c, pa.list_(pa.float64()))], names=["id", "v"]
+    )
+    out = pa.Table.from_batches(
+        list(_topk_kernel(iter([batch]), pa.array(range(7)), qm, qlens, qclean, qn, k=30))
+    ).to_pylist()
+    assert len(out) == 7 * 30
+    for r in out:
+        qv, cv = q[r["query_id"]], c[r["neighbor_id"] - 100]
+        assert r["dot"] == fold(qv, cv)
+        assert r["qn"] == math.sqrt(fold(qv, qv)) and r["cn"] == math.sqrt(fold(cv, cv))
+
+
+def test_cosine_topk_ties_across_batches_and_layouts(spark, conf):
+    """Exact ties and 6-dp ties straddle the k boundary across Arrow
+    batches: every layout gives the per-pair form's rows. Scaling a
+    vector by 2 keeps its cosine bit-identical; (1, 0.9999995) beats
+    (1, 1) unrounded but ties it after round(…, 6), so the smaller id
+    must win whatever batch either lands in."""
+    from data_engineering_spark.operators.similarity import cosine_topk
+
+    rows = [(0, [1.0, 0.0]), (1, [1.0, 0.1]), (2, [2.0, 0.2])]
+    rows += [(i, [float(1 + i % 2), float(1 + i % 2)]) for i in range(40, 3, -3)]
+    rows += [(3, [1.0, 1.0]), (90, [1.0, 0.9999995]), (91, [0.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    q = df.filter(F.col("vec_id") < 2)
+    for k in (1, 3, 4):
+        want = _rows(_per_pair_topk(df, q, k))
+        assert [r[1] for r in want if r[0] == 0] == [1, 2, 3, 4][:k]
+        for batch in ("2", "10000"):
+            conf("spark.sql.execution.arrow.maxRecordsPerBatch", batch)
+            for parts in (1, 7):
+                assert _rows(cosine_topk(df.repartition(parts), q, k)) == want, (k, batch, parts)
+
+
+def test_cosine_topk_zero_norm_raises_like_per_pair(spark, conf):
+    """A zero-norm query or corpus vector divides by zero in Spark SQL
+    exactly as the per-pair form does: DIVIDE_BY_ZERO under ANSI."""
+    from data_engineering_spark.operators.similarity import cosine_topk
+
+    conf("spark.sql.ansi.enabled", "true")
+    df = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    for q in (df.filter("vec_id = 3"), df.filter("vec_id = 1")):
+        for fn in (cosine_topk, _per_pair_topk):
+            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+                fn(df, q, k=1).collect()
+
+
+def test_cosine_topk_null_vectors_match_per_pair(spark, conf):
+    """NULL vectors, NULL elements and ragged lengths give NULL sims
+    that rank last, exactly the per-pair form's rows, in any layout."""
+    from data_engineering_spark.operators.similarity import cosine_topk
+
+    df = spark.createDataFrame(
+        [
+            (1, [1.0, 0.0]),
+            (2, [0.6, 0.8]),
+            (3, None),
+            (4, [None, 1.0]),
+            (5, [1.0, 1.0, 1.0]),
+            (6, [0.0, 2.0]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    conf("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    for q in (df.filter("vec_id in (1, 3)"), df):
+        want = _rows(_per_pair_topk(df, q, k=6))
+        assert any(r[2] is None for r in want)
+        for parts in (1, 3):
+            assert _rows(cosine_topk(df.repartition(parts), q, k=6)) == want
+
+
+def test_canonical_assignment_chain(spark, monkeypatch):
     """A duplicate chain 1-2, 2-3, plus pair 10-11: labels converge to the
-    cluster min even though (1,3) was never a pair."""
+    cluster min even though (1,3) was never a pair. The size gate is
+    forced to 0 so the distributed loop runs (the driver path is proven
+    against it by test_canonical_assignment_driver_matches_distributed)."""
+    from data_engineering_spark.operators import dedup
     from data_engineering_spark.operators.dedup import canonical_assignment
+
+    monkeypatch.setattr(dedup, "_CANONICAL_DRIVER_MAX_EDGES", 0)
 
     pairs = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], ["id_a", "id_b"])
     ids = spark.createDataFrame([(i,) for i in [1, 2, 3, 10, 11, 50]], ["doc_id"])
@@ -601,15 +734,19 @@ def test_canonical_assignment_chain(spark):
     assert out[50] == (50, False)  # untouched singleton
 
 
-def test_canonical_assignment_raises_on_truncation(spark):
+def test_canonical_assignment_raises_on_truncation(spark, monkeypatch):
     """A chain deeper than max_rounds must raise, never silently emit
     non-canonical labels (r11 review: a drop-list keyed on truncated
     labels points survivors at documents that are themselves dropped).
     The same chain converges — and certifies via the extra quiet
-    round — once max_rounds covers its diameter."""
+    round — once max_rounds covers its diameter. Runs the distributed
+    loop (size gate forced to 0)."""
     import pytest as _pytest
 
+    from data_engineering_spark.operators import dedup
     from data_engineering_spark.operators.dedup import canonical_assignment
+
+    monkeypatch.setattr(dedup, "_CANONICAL_DRIVER_MAX_EDGES", 0)
 
     chain = [(i, i + 1) for i in range(1, 9)]  # diameter-8 path 1..9
     pairs = spark.createDataFrame(chain, ["id_a", "id_b"])
@@ -777,10 +914,15 @@ def test_ivf_refined_finds_planted_neighbor(spark):
     assert 999 in {r.neighbor_id for r in out.collect()}
 
 
-def test_canonical_assignment_reliable_checkpoint(spark, tmp_path):
+def test_canonical_assignment_reliable_checkpoint(spark, tmp_path, monkeypatch):
     """reliable_checkpoints=True runs the propagation through cluster
-    checkpoint() storage (fault-tolerant mode) with identical results."""
+    checkpoint() storage (fault-tolerant mode) with identical results.
+    Only the distributed loop checkpoints, so the size gate is forced
+    to 0."""
+    from data_engineering_spark.operators import dedup
     from data_engineering_spark.operators.dedup import canonical_assignment
+
+    monkeypatch.setattr(dedup, "_CANONICAL_DRIVER_MAX_EDGES", 0)
 
     spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     ids = spark.createDataFrame([(i,) for i in range(1, 7)], ["doc_id"])
@@ -793,6 +935,34 @@ def test_canonical_assignment_reliable_checkpoint(spark, tmp_path):
         for r in canonical_assignment(pairs, ids, reliable_checkpoints=True).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 5, 6: 5}
+
+
+def test_canonical_assignment_driver_matches_distributed(spark, monkeypatch):
+    """Both sides of the edge-count gate give identical output on one
+    graph: a long chain, a star, a cycle, a pair whose endpoint is not
+    in ``ids`` (no label flows through it) and an untouched singleton."""
+    from data_engineering_spark.operators import dedup
+    from data_engineering_spark.operators.dedup import canonical_assignment
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(10, 16)]  # chain 10..16
+        + [(20, j) for j in (21, 22, 23)]  # star
+        + [(30, 31), (31, 32), (32, 30)]  # cycle
+        + [(41, 40), (40, 99)],  # 99 is not an id
+        ["id_a", "id_b"],
+    )
+    ids = spark.createDataFrame(
+        [(i,) for i in [*range(10, 17), 20, 21, 22, 23, 30, 31, 32, 40, 41, 50]], ["doc_id"]
+    )
+
+    def run():
+        return sorted(map(tuple, canonical_assignment(pairs, ids, max_rounds=8).collect()))
+
+    driver = run()
+    monkeypatch.setattr(dedup, "_CANONICAL_DRIVER_MAX_EDGES", 0)
+    distributed = run()
+    assert driver == distributed
+    assert {r[0]: r[1] for r in driver}[16] == 10
 
 
 def test_pq_topk_finds_planted_neighbor(spark):

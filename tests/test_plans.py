@@ -611,3 +611,18 @@ def test_runtime_bloom_filter_prunes_fact_scan_at_scale(spark, sf_dir):
         spark.conf.unset(
             "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold"
         )
+
+
+def test_cosine_topk_scores_in_one_arrow_kernel(spark, sf_dir):
+    """cosine_topk scores every (query, corpus row) pair inside one Arrow
+    kernel per corpus batch: the executed plan has no nested-loop or
+    cartesian join and no higher-order fold evaluated per pair."""
+    from data_engineering_spark.operators.similarity import cosine_topk
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    df = cosine_topk(emb, emb.filter(F.col("vec_id") < 10), k=5)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInArrow" in plan, plan
+    for node in ("BroadcastNestedLoopJoin", "CartesianProduct", "aggregate(", "zip_with("):
+        assert node not in plan, f"{node} in\n{plan}"
