@@ -34,7 +34,9 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from ..session import local_frame
 from .dedup import _md5_60bits
 from .text import tokens
 
@@ -134,6 +136,12 @@ _WEIGHTS_MEMO_CAP = 4
 _WEIGHTS_MEMO: list[tuple[int, DataFrame, tuple, tuple]] = []
 _WEIGHTS_MEMO_LOCK = __import__("threading").Lock()
 
+# Driver-built weight tables and curves (Arrow-built local frames).
+_WEIGHT_SCHEMA = T.StructType([T.StructField(c, T.LongType()) for c in ("bucket", "wt")])
+_CURVE_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("k", "threshold", "tp", "fp", "fn", "tn")]
+)
+
 
 def train_perceptron(
     docs: DataFrame,
@@ -199,8 +207,8 @@ def train_perceptron(
     try:
         for _ in range(iterations):
             if w:
-                w_df = spark.createDataFrame(
-                    [(int(b), int(v)) for b, v in w.items()], "bucket long, wt long"
+                w_df = local_frame(
+                    spark, [(int(b), int(v)) for b, v in w.items()], _WEIGHT_SCHEMA
                 )
                 margins = (
                     feats.join(F.broadcast(w_df), "bucket")
@@ -283,9 +291,7 @@ def classifier_margins(
     # bias weight contributes 0 to the margin, so values are identical.
     wmap = {int(b): int(v) for b, v in weights}
     wmap.setdefault(BIAS_BUCKET, 0)
-    w_df = spark.createDataFrame(
-        sorted(wmap.items()), "bucket long, wt long"
-    )
+    w_df = local_frame(spark, sorted(wmap.items()), _WEIGHT_SCHEMA)
     return (
         feats.join(F.broadcast(w_df), "bucket")
         .groupBy("doc_id")
@@ -324,9 +330,6 @@ def operating_curve(
     if n_bins < 2:
         raise ValueError(f"operating_curve: n_bins must be >= 2, got {n_bins}")
     spark = scored.sparkSession
-    schema = (
-        "k long, threshold long, tp long, fp long, fn long, tn long"
-    )
     j = scored.join(labels, "doc_id").select("margin", "y").persist(
         StorageLevel.MEMORY_AND_DISK
     )
@@ -335,7 +338,7 @@ def operating_curve(
         if mn is None:
             # empty join: no margins, no thresholds — the curve is empty
             # (the cross-engine degenerate case ADVICE r10 flagged)
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, [], _CURVE_SCHEMA)
         ts = [
             (k, int(mn) + ((int(mx) - int(mn)) * k) // n_bins)
             for k in range(1, n_bins)
@@ -358,7 +361,7 @@ def operating_curve(
             (k, t, wide[f"tp{k}"], wide[f"fp{k}"], wide[f"fn{k}"], wide[f"tn{k}"])
             for k, t in ts
         ]
-        return spark.createDataFrame(rows, schema)
+        return local_frame(spark, rows, _CURVE_SCHEMA)
     finally:
         j.unpersist()
 

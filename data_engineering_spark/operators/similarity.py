@@ -506,9 +506,12 @@ def cosine_topk(
     against it with the folds of ``dot``/``l2_norm`` in the same IEEE
     operation order (bit-identical to them and to DuckDB's sequential
     ``list_dot_product``) and emits only a superset of each query's
-    local top k. ``round(dot / (qn * cn), 6)`` and the ``row_number``
-    window stay in Spark SQL, so rounding, NULL ordering and the ANSI
-    divide-by-zero error are exactly those of the per-pair SQL form."""
+    local top k. ``round(try_divide(dot, qn * cn), 6)`` and the
+    ``row_number`` window stay in Spark SQL, so rounding and NULL
+    ordering are exactly those of the per-pair SQL form. A zero-norm
+    query or corpus vector gives its pairs a NULL sim that ranks last
+    (DuckDB's double division gives NULL for x / 0.0 as well), not a
+    divide-by-zero error that fails the whole query under ANSI."""
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).cast("array<double>")
     ).toArrow()
@@ -523,7 +526,7 @@ def cosine_topk(
     scored = corpus.select(id_col, F.col(vec_col).cast("array<double>")).mapInArrow(
         lambda it: _topk_kernel(it, qids, qm, qlens, qclean, qn, k), schema
     )
-    sim = F.round(F.col("dot") / (F.col("qn") * F.col("cn")), 6)
+    sim = F.round(F.try_divide(F.col("dot"), F.col("qn") * F.col("cn")), 6)
     return _rank_topk(scored.select("query_id", "neighbor_id", sim.alias("sim")), k)
 
 

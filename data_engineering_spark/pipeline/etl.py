@@ -13,7 +13,7 @@ import time
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
-from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..functions.dialect import rewrite_redshift_sql
 from ..sources.writers import partition_overwrite, truncate_and_load
@@ -120,10 +120,18 @@ def run_sql_etl(
 
 
 def write_audit(spark: SparkSession, rec: AuditRecord, audit_dir: str) -> None:
-    """Append-only audit write (``comlib.py:386-407``)."""
-    spark.createDataFrame([vars(rec)], schema=AUDIT_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(audit_dir)
+    """Append-only audit write (``comlib.py:386-407``): one file, one job.
+
+    The row is built in the JVM as typed literals over a one-row range,
+    so the write needs no Python worker (a list-built ``createDataFrame``
+    ships a pickled Python RDD through them). A naive ``platform_dt``
+    converts the way the list path converts it, as process-local time;
+    the Arrow/pandas path would read it as UTC and shift it under a
+    non-UTC process timezone."""
+    row = vars(rec)
+    spark.range(1, numPartitions=1).select(
+        *(F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in AUDIT_SCHEMA.fields)
+    ).write.mode("append").parquet(audit_dir)
 
 
 def set_nullable_for_columns(schema: T.StructType, nullable: bool = True) -> T.StructType:

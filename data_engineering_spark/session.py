@@ -24,9 +24,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, types as T
 
-__all__ = ["get_spark", "prepare_session"]
+__all__ = ["get_spark", "prepare_session", "local_frame"]
 
 # The directory holding the ``data_engineering_spark`` package.
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -116,3 +116,28 @@ def prepare_session(spark: SparkSession) -> SparkSession:
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.expectedNumItems", "100000")
     spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", "4194304")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A small driver-side frame (lookup tables, weight tables, empty
+    results) built through an Arrow table in the schema's Arrow types.
+
+    The plan is a ``LocalTableScan``: no Python worker runs, where a
+    list-built ``createDataFrame`` ships a pickled Python RDD through
+    them. Timestamp columns with values are rejected: Arrow reads a
+    naive ``datetime`` as UTC, while the list path reads it as
+    process-local time, so the two paths disagree under a non-UTC
+    process timezone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if rows and any(
+        isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType)) for f in schema.fields
+    ):
+        raise TypeError("local_frame: timestamp columns convert differently through Arrow")
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

@@ -55,6 +55,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 __all__ = ["LakeTable", "ConcurrentWriteError"]
 
 _LOG_DIR = "_txlog"
@@ -950,7 +952,7 @@ class LakeTable:
             out_schema = (
                 T.StructType(schema.fields + loc_fields) if with_location else schema
             )
-            return self.spark.createDataFrame([], out_schema)
+            return local_frame(self.spark, [], out_schema)
         groups: dict[tuple, list[str]] = {}
         for p in sel:
             part = snap.files[p].get("partition", {})
@@ -995,7 +997,8 @@ class LakeTable:
                         [T.StructField("__file__", T.StringType(), False)]
                         + [T.StructField(k, T.StringType(), True) for k in keys]
                     )
-                    lk = self.spark.createDataFrame(
+                    lk = local_frame(
+                        self.spark,
                         [
                             tuple(
                                 [os.path.basename(p)]
@@ -1023,7 +1026,8 @@ class LakeTable:
                     for p in dv_files
                     for pos in snap.dvs[p]
                 ]
-                dv_lk = self.spark.createDataFrame(
+                dv_lk = local_frame(
+                    self.spark,
                     pairs,
                     T.StructType(
                         [

@@ -588,7 +588,7 @@ def _per_pair_topk(corpus, queries, k):
     c = corpus.select(
         F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("cv")
     ).withColumn("cn", l2_norm(F.col("cv")))
-    sim = F.round(dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6)
+    sim = F.round(F.try_divide(dot(F.col("qv"), F.col("cv")), F.col("qn") * F.col("cn")), 6)
     w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
     return (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
@@ -674,19 +674,48 @@ def test_cosine_topk_ties_across_batches_and_layouts(spark, conf):
                 assert _rows(cosine_topk(df.repartition(parts), q, k)) == want, (k, batch, parts)
 
 
-def test_cosine_topk_zero_norm_raises_like_per_pair(spark, conf):
-    """A zero-norm query or corpus vector divides by zero in Spark SQL
-    exactly as the per-pair form does: DIVIDE_BY_ZERO under ANSI."""
+def test_cosine_topk_zero_norm_gives_null_sim_like_per_pair(spark, conf):
+    """A zero-norm query or corpus vector gives its pairs a NULL sim
+    that ranks last, under ANSI on and off, exactly the per-pair form's
+    rows: one zero embedding must not fail every top-k query."""
     from data_engineering_spark.operators.similarity import cosine_topk
 
-    conf("spark.sql.ansi.enabled", "true")
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.6, 0.8]), (3, [0.0, 0.0])], "vec_id long, embedding array<double>"
     )
-    for q in (df.filter("vec_id = 3"), df.filter("vec_id = 1")):
-        for fn in (cosine_topk, _per_pair_topk):
-            with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
-                fn(df, q, k=1).collect()
+    for ansi in ("true", "false"):
+        conf("spark.sql.ansi.enabled", ansi)
+        zero_q = _rows(cosine_topk(df, df.filter("vec_id = 3"), k=2))
+        assert zero_q == [(3, 1, None, 1), (3, 2, None, 2)]
+        for q in (df.filter("vec_id = 3"), df.filter("vec_id = 1"), df):
+            want = _rows(_per_pair_topk(df, q, k=2))
+            assert _rows(cosine_topk(df, q, k=2)) == want
+        assert (1, 3, None, 2) in want  # the zero corpus vector ranks last
+
+
+def test_cosine_topk_zero_vector_matches_duckdb_twin(spark, tmp_path):
+    """A planted zero vector on both sides of ``sim_cosine_topk``: the
+    Spark operator and the registry's DuckDB twin give the same rows,
+    NULL sims ranked last."""
+    import duckdb
+
+    from data_engineering_spark.operators.similarity import cosine_topk
+    from data_engineering_spark.registry import ORACLE
+    from data_engineering_spark import queries_llm  # noqa: F401 — registers the twin
+
+    rng = np.random.default_rng(11)
+    rows = [(i, rng.standard_normal(4).round(3).tolist()) for i in range(14)]
+    rows[2], rows[12] = (2, [0.0] * 4), (12, [0.0] * 4)
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    pq = str(tmp_path / "emb.parquet")
+    df.write.mode("overwrite").parquet(pq)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM '{pq}/*.parquet'")
+    want = sorted(con.execute(ORACLE["sim_cosine_topk"]).fetchall())
+    got = _rows(cosine_topk(df, df.filter(F.col("vec_id") < 10), k=5))
+    assert got == want
+    assert [r[1:3] for r in got if r[0] == 2] == [(i, None) for i in (0, 1, 3, 4, 5)]
+    assert not any(r[1] in (2, 12) for r in got)  # NULL sims rank behind every number
 
 
 def test_cosine_topk_null_vectors_match_per_pair(spark, conf):

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import types as T
 
 from data_engineering_spark.pipeline.etl import set_nullable_for_columns
@@ -98,3 +99,97 @@ def test_full_overwrite_is_truncate_and_load(spark, tmp_path):
     assert writers.full_overwrite(df, d) == 1
     df2 = spark.createDataFrame([(2, "b"), (3, "c")], "k long, v string")
     assert writers.full_overwrite(df2, d) == 2  # true overwrite, not append
+
+
+# ---------------------------------------------------------------------------
+# Driver-built lookup frames (session.local_frame): Arrow-built local
+# relations must hold exactly the rows and schema of the list-built form.
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def local_frames(monkeypatch):
+    """Record every ``local_frame`` call the given module makes."""
+    from data_engineering_spark import session
+
+    calls = []
+
+    def record(spark, rows, schema):
+        df = session.local_frame(spark, rows, schema)
+        calls.append((list(rows), schema, df))
+        return df
+
+    def patch(module):
+        monkeypatch.setattr(module, "local_frame", record)
+        return calls
+
+    return patch
+
+
+def _assert_list_built_twins(spark, calls):
+    for rows, schema, df in calls:
+        want = spark.createDataFrame(rows, schema)
+        assert df.schema == want.schema
+        assert sorted(map(tuple, df.collect()), key=repr) == sorted(
+            map(tuple, want.collect()), key=repr
+        )
+        # a local relation: no pickled Python RDD for workers to run
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+
+
+def test_txlog_lookup_frames_equal_list_built(spark, tmp_path, local_frames):
+    """Partition-value lookups (incl. a NULL partition), deletion-vector
+    lookups and the empty scan frame."""
+    from data_engineering_spark.sources import txlog
+
+    calls = local_frames(txlog)
+    t = txlog.LakeTable(spark, str(tmp_path / "lk"))
+    rows = [(d, i, f"t{i}") for d in ("2024-01-01", "2024-01-02", None) for i in range(6)]
+    t.create(spark.createDataFrame(rows, "day string, n long, tag string"), partition_by=["day"])
+    t.delete_where_dv("n = 3")
+    want = sorted((r for r in rows if r[1] != 3), key=repr)
+    assert sorted(map(tuple, t.scan().collect()), key=repr) == want
+    assert t.scan(filters=[("n", ">", 100)]).count() == 0  # every file pruned
+    by_kind = {}
+    for rows_, schema, _ in calls:
+        by_kind.setdefault(tuple(schema.names), []).extend(rows_)
+    assert None in {r[1] for r in by_kind[("__file__", "day")]}  # the NULL partition
+    assert by_kind[("__file__", "__pos__")]  # deletion-vector positions
+    assert any(not rows_ for rows_, _, _ in calls)  # the empty scan frame
+    _assert_list_built_twins(spark, calls)
+
+
+def test_classify_lookup_frames_equal_list_built(spark, local_frames):
+    """Perceptron weight tables (training and scoring) and the operating
+    curve, including the empty curve."""
+    from pyspark.sql import functions as F
+
+    from data_engineering_spark.operators import classify
+
+    calls = local_frames(classify)
+    rows = [(i, f"theorem proof lemma v{i % 3}", 1) for i in range(10)]
+    rows += [(i, f"buy cheap pills w{i % 3}", -1) for i in range(10, 20)]
+    docs = spark.createDataFrame(rows, ["doc_id", "text", "y"])
+    w, _ = classify.train_perceptron(docs, F.col("y"), iterations=3, buckets=32, cache=False)
+    scored = classify.classifier_margins(docs, w, buckets=32, cache=False)
+    labels = docs.select("doc_id", "y")
+    assert classify.operating_curve(scored, labels, n_bins=4).count() == 3
+    assert classify.operating_curve(scored, labels.filter("y = 0"), n_bins=4).count() == 0
+    names = [tuple(schema.names) for _, schema, _ in calls]
+    assert names.count(("bucket", "wt")) >= 2
+    assert names.count(("k", "threshold", "tp", "fp", "fn", "tn")) == 2
+    _assert_list_built_twins(spark, calls)
+
+
+def test_local_frame_rejects_timestamp_values(spark):
+    """Arrow reads a naive datetime as UTC, the list path as process-
+    local time: timestamp columns with values are refused."""
+    from datetime import datetime
+
+    from data_engineering_spark.session import local_frame
+
+    schema = T.StructType([T.StructField("t", T.TimestampType())])
+    with pytest.raises(TypeError, match="timestamp"):
+        local_frame(spark, [(datetime(2024, 1, 1),)], schema)
+    assert local_frame(spark, [], schema).schema == schema
