@@ -206,7 +206,7 @@ BIMODAL = {
 # both timed runs and so records the serving-path apply cost.
 #
 # r15 (declared in OPTIMIZATION_r15.md): the classifier family adopts
-# the SAME protocol — train_perceptron(memo=True) shares one trained
+# the SAME protocol — the classifier queries share one trained
 # weight list per session (a driver-local ≤65-tuple list), so
 # nlp_train_quality_classifier runs ONCE cold with the weights memo
 # cleared (honest trainer economics; min-of-2 would time its own memo
@@ -329,11 +329,9 @@ def main() -> None:
         # trainer gets ONE cold run with a cleared vocab memo (see
         # TRAINER_SINGLE_RUN).
         if name in TRAINER_SINGLE_RUN:
-            from data_engineering_spark.operators.classify import _WEIGHTS_MEMO
-            from data_engineering_spark.operators.text import _BPE_VOCAB_MEMO
+            from data_engineering_spark import memo
 
-            _BPE_VOCAB_MEMO.clear()
-            _WEIGHTS_MEMO.clear()
+            memo.clear()
             n_runs = 1
         else:
             n_runs = 3 if name in BIMODAL else 2

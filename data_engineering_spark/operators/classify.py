@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .. import memo
 from ..session import local_frame
 from .dedup import _md5_60bits
 from .text import tokens
@@ -83,59 +84,6 @@ def hashed_features(
     return feat.unionByName(bias)
 
 
-def _feats_prepared(
-    docs: DataFrame, buckets: int, id_col: str, text_col: str, cache: bool = True
-) -> tuple[DataFrame, bool]:
-    """Hashed features routed through the session-lifetime plan-keyed
-    memo registry (r14): every classifier query both TRAINS (3
-    iterations over the features) and SCORES (another full feature
-    pass), so an unshared prep tokenized + md5-hashed the corpus twice
-    per query. The registry dedupes on (docs plan, params) exactly like
-    the minhash/simhash shared preps; a session-level clearCache()
-    (bench/driver harness) invalidates entries, so every timed run
-    still computes from parquet.
-
-    Returns ``(feats, registry_owned)`` (r15, ADVICE): ``registry_owned``
-    is True only when the relation is actually registered in the
-    LRU-bounded registry (session lifetime, caller must NOT unpersist).
-    With ``cache=False`` — the rewrite-in-place escape hatch the lattice
-    preps already have — or when the plan is unhashable, the RAW
-    unpersisted relation comes back and the caller manages any persist
-    it needs for its own multi-pass consumption."""
-    raw = hashed_features(docs, buckets, id_col, text_col)
-    if not cache:
-        return raw, False
-    try:
-        docs.semanticHash()
-    except Exception:  # noqa: BLE001 — unhashable plan: registry can't serve it
-        return raw, False
-    from .similarity import _memoized_persist
-
-    return (
-        _memoized_persist(docs, ("cls_feats", buckets, id_col, text_col), raw),
-        True,
-    )
-
-
-# Session-bounded memo for TRAINED perceptron weights (r15, the
-# _BPE_VOCAB_MEMO discipline): the weights are a driver-local ≤65-tuple
-# list, so caching the values themselves is exact and storage-trivial.
-# Motivation: four classifier queries each replay the identical
-# 3-iteration eager train loop (3 collects × ~0.5-1 s of fixed stage
-# cost) on the same corpus before their own scoring/audit work — the
-# weights are pure data once trained. Keyed like the vocab memo
-# (semanticHash + sameSemantics + params, label keyed by its expression
-# string), lock-guarded, capped. Bench protocol mirrors the BPE
-# trainer's: bench.py clears this memo and runs the TRAIN query once
-# cold (TRAINER_SINGLE_RUN), so the trainer-economics row stays honest
-# while the score/curve/audit rows record the serving path. Same reuse
-# caveat as every plan-keyed cache: a corpus rewritten in place
-# mid-session would replay stale weights — such callers keep the
-# default memo=False.
-_WEIGHTS_MEMO_CAP = 4
-_WEIGHTS_MEMO: list[tuple[int, DataFrame, tuple, tuple]] = []
-_WEIGHTS_MEMO_LOCK = __import__("threading").Lock()
-
 # Driver-built weight tables and curves (Arrow-built local frames).
 _WEIGHT_SCHEMA = T.StructType([T.StructField(c, T.LongType()) for c in ("bucket", "wt")])
 _CURVE_SCHEMA = T.StructType(
@@ -150,8 +98,6 @@ def train_perceptron(
     buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache: bool = True,
-    memo: bool = False,
 ) -> tuple[list[tuple[int, int]], list[int]]:
     """Train the perceptron; returns ``(weights, errors_per_iter)`` —
     ``weights`` the sorted nonzero (bucket, weight) pairs, ``errors``
@@ -161,44 +107,11 @@ def train_perceptron(
 
     ``label`` is a Column evaluating to +1/−1 on ``docs``. Weights
     start at zero, so iteration 1's update is the class-conditional
-    token-count difference — deterministic from the data alone.
-
-    ``cache=False`` bypasses the session memo registry for the shared
-    feature prep (per-call persist, released before returning) — the
-    escape hatch for corpora rewritten in place mid-session (the
-    ``lattice_unit_prep`` caveat, r13/r14 advice). ``memo=True``
-    additionally serves the TRAINED WEIGHTS from the session vocab-memo
-    when the same (docs plan, label, params) already trained — see
-    ``_WEIGHTS_MEMO``."""
+    token-count difference — deterministic from the data alone."""
     spark = docs.sparkSession
-    params = (iterations, buckets, id_col, text_col, str(label))
-    h = None
-    if memo:
-        try:
-            h = docs.semanticHash()
-        except Exception:  # noqa: BLE001 — memo is an optimization, never a gate
-            h = None
-        if h is not None:
-            with _WEIGHTS_MEMO_LOCK:
-                for entry in list(_WEIGHTS_MEMO):
-                    eh, esrc, eparams, eres = entry
-                    if eh == h and eparams == params:
-                        try:
-                            if not esrc.sameSemantics(docs):
-                                continue
-                        except Exception:  # noqa: BLE001
-                            continue
-                        _WEIGHTS_MEMO.remove(entry)
-                        _WEIGHTS_MEMO.append(entry)
-                        return list(eres[0]), list(eres[1])
-    # registry-managed persist (r14): shared with classifier_margins so
-    # a train-then-score query computes the features once, not twice.
-    # When the registry can't own it (cache=False / unhashable plan),
-    # persist per call and release in the finally below — the old
-    # pre-r14 lifecycle (r14 ADVICE: the fallback used to leak).
-    feats, registry_owned = _feats_prepared(docs, buckets, id_col, text_col, cache)
-    if not registry_owned:
-        feats = feats.persist(StorageLevel.MEMORY_AND_DISK)
+    # session-memo persist (r14): shared with classifier_margins, so a
+    # train-then-score query tokenizes and hashes the corpus once
+    feats = memo.persisted("cls_feats", hashed_features(docs, buckets, id_col, text_col))
     labels = docs.select(
         F.col(id_col).alias("doc_id"), label.cast("long").alias("y")
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -246,20 +159,10 @@ def train_perceptron(
             if not upd:
                 break
     finally:
-        # registry-owned feats (LRU-bounded, session lifetime) stay — an
-        # unpersist would strand the entry other consumers in the same
-        # query (classifier_margins) are about to hit. A per-call
-        # persist (cache=False / unhashable plan) is released here.
+        # feats stay: the memo owns them, and classifier_margins in the
+        # same query is about to read them
         labels.unpersist()
-        if not registry_owned:
-            feats.unpersist()
-    result = sorted(w.items())
-    if memo and h is not None:
-        with _WEIGHTS_MEMO_LOCK:
-            _WEIGHTS_MEMO.append((h, docs, params, (list(result), list(errors))))
-            while len(_WEIGHTS_MEMO) > _WEIGHTS_MEMO_CAP:
-                _WEIGHTS_MEMO.pop(0)
-    return result, errors
+    return sorted(w.items()), errors
 
 
 def classifier_margins(
@@ -268,19 +171,15 @@ def classifier_margins(
     buckets: int = 64,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache: bool = True,
 ) -> DataFrame:
     """Score every document under trained weights: ``(doc_id, margin,
     pred)`` with ``pred = margin > 0``. One broadcast join + one
     doc-keyed partial agg; margins are exact int64 (see module
     docstring for the headroom bound). Total over ALL documents — a doc
     whose every feature bucket carries zero weight (pruned from the
-    nonzero table) scores margin 0, not a dropped row. ``cache=False``
-    bypasses the shared-feature memo registry (scoring reads the
-    features exactly once, so no per-call persist is needed) — the
-    rewrite-in-place escape hatch."""
+    nonzero table) scores margin 0, not a dropped row."""
     spark = docs.sparkSession
-    feats, _registry_owned = _feats_prepared(docs, buckets, id_col, text_col, cache)
+    feats = memo.persisted("cls_feats", hashed_features(docs, buckets, id_col, text_col))
     # Keep the BIAS bucket in the weight table even when its trained
     # weight pruned to zero (r14): every document carries exactly one
     # bias feature row, so the broadcast inner join then reaches EVERY

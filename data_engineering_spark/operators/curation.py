@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from .dedup import shingle_hashes, shingles
 from .text import tokens
 
@@ -322,7 +323,6 @@ def dsir_weights(
     buckets: int = 4096,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cache: bool = True,
 ) -> DataFrame:
     """DSIR-style importance weights for data selection (Xie et al. 2023,
     "Data Selection for Language Models via Importance Resampling"): fit
@@ -349,28 +349,18 @@ def dsir_weights(
     stream joined to that broadcast plus ONE doc-keyed partial agg. The
     corpus is scanned twice (q-counts, scoring) — at scale, persist the
     q-count table per ingest batch instead of recomputing; ``target`` is
-    the curated set and is small by definition. ``cache=False``
-    bypasses the session memo registry for the shared feature stream
-    (per-call persist, never re-served) - the rewrite-in-place escape
-    hatch (r14 ADVICE asked for parity with the lattice preps)."""
+    the curated set and is small by definition."""
     # r14: the corpus feature stream is consumed TWICE (q-counts and the
     # scoring join) and its per-gram md5 fan-out is CPU-bound off an
     # under-split bench scan — _spread fans it across cores (isolated
     # A/B: one pass 1.83 -> 0.70 s at sf0.1; no-op on a well-split
-    # scan), and the memo registry dedupes the stream between the two
+    # scan), and the session memo shares the stream between the two
     # consumers exactly like the minhash/ngram shared preps.
     from .dedup import _spread
-    from .similarity import _memoized_persist
 
-    raw = _hashed_ngram_stream(_spread(corpus), text_col, id_col, buckets)
-    if cache:
-        feats = _memoized_persist(
-            corpus, ("dsir_feats", text_col, id_col, buckets), raw
-        )
-    else:
-        from pyspark import StorageLevel
-
-        feats = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    feats = memo.persisted(
+        "dsir_feats", _hashed_ngram_stream(_spread(corpus), text_col, id_col, buckets)
+    )
     q = feats.groupBy("b").agg(F.count(F.lit(1)).alias("qc"))
     w = Window.partitionBy()
     # ONE pass over the target stream, ZERO eager side effects: the two
@@ -978,7 +968,6 @@ def boilerplate_strip(
     id_col: str = "doc_id",
     block: int = 8,
     min_df: int = 3,
-    cache: bool = True,
 ) -> DataFrame:
     """Corpus-frequent boilerplate removal (the CCNet/RefinedWeb stage):
     segment each document into non-overlapping ``block``-token blocks,
@@ -996,30 +985,22 @@ def boilerplate_strip(
     adversarial all-dup data AQE decides instead); reconstruction is
     ONE doc-keyed groupBy whose collect_list is bounded by the doc's
     own block count. Three corpus-scaling exchanges total, none wider
-    than (id, block). ``cache=False`` bypasses the session memo registry
-    for the shared block fan-out (per-call persist, never re-served) -
-    the rewrite-in-place escape hatch (r14 ADVICE)."""
+    than (id, block)."""
     from .joins import broadcast_if_small
 
     # r14: the block fan-out feeds BOTH the df-count aggregate and the
     # reconstruction join, and is CPU-bound off an under-split bench
     # scan — _spread fans it across cores (isolated A/B: one chunk pass
     # 1.16 -> 0.51 s, full operator 2.86 -> 1.95 s at sf0.1; no-op on a
-    # well-split scan) and the memo registry dedupes the fan-out
+    # well-split scan) and the session memo shares the fan-out
     # between the two consumers.
     from .dedup import _spread
-    from .similarity import _memoized_persist
 
-    raw = chunk_sliding(_spread(df), window=block, stride=block,
-                        text_col=text_col, id_col=id_col)
-    if cache:
-        chunks = _memoized_persist(
-            df, ("bp_chunks", text_col, id_col, block), raw
-        )
-    else:
-        from pyspark import StorageLevel
-
-        chunks = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    chunks = memo.persisted(
+        "bp_chunks",
+        chunk_sliding(_spread(df), window=block, stride=block,
+                      text_col=text_col, id_col=id_col),
+    )
     dfreq = (
         chunks.select(id_col, "chunk_text")
         .distinct()

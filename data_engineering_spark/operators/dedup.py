@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import memo
 from .text import fingerprint, tokens
 
 # Below this many total input bytes, a runtime broadcast of any verify-join
@@ -390,7 +391,6 @@ def minhash_near_dedup(
     max_bucket: int | None | str = "auto",
     verify_join: str = "auto",
     signature_impl: str = "arrow",
-    cache: bool = True,
 ) -> DataFrame:
     """MinHash + banded LSH near-dedup → (id_a, id_b, jaccard) pairs.
 
@@ -442,22 +442,7 @@ def minhash_near_dedup(
       ``_SMALL_CORPUS_BYTES`` leave the join to AQE (any runtime
       broadcast is provably tiny), larger or unknowable inputs get the
       hint. ``"shuffle_hash"`` / ``"none"`` force either way.
-    - ``cache=False`` bypasses the session memo registry for the two
-      shared-prep persists (per-call persist, never re-served): the
-      registry serves a SAME-PLAN re-run from cache, which is wrong for
-      callers re-reading a path whose files were rewritten in place
-      mid-session (the ``lattice_unit_prep`` rewrite-in-place caveat,
-      r13 advice).
     """
-    from .similarity import _memoized_persist as _memo_registry
-
-    def _memoized_persist(src, params, out):
-        if cache:
-            return _memo_registry(src, params, out)
-        from pyspark import StorageLevel
-
-        return out.persist(StorageLevel.MEMORY_AND_DISK)
-
     small_corpus: bool | None = None  # resolved lazily, probed at most once
 
     def _is_small() -> bool:
@@ -482,23 +467,19 @@ def minhash_near_dedup(
     shingle_fp = (
         shingle_hashes_portable if signature_impl == "portable" else shingle_hashes
     )
-    # Both persists below route through the bounded memo registry (the
-    # r11/r12 policy every other shared-prep persist already follows):
-    # a raw per-call persist is never unpersisted — the returned pairs
-    # depend on it — so repeated invocations in a long-lived session
-    # accumulate dead cache entries. The registry caps live entries
-    # (LRU-unpersisting evictees) and re-serves the shingle relation to
-    # a same-plan re-run.
-    sh_plan = _spread(
+    # Both persists below go through the session memo: a raw per-call
+    # persist is never unpersisted — the returned pairs depend on it —
+    # so repeated invocations in a long-lived session would accumulate
+    # dead cache entries. The memo bounds them and serves a same-plan
+    # re-run from the cached relation.
+    sh = _spread(
         df,
         # the md5 permutation family is the repo's densest spread stage
         # (see _SPREAD_DENSE_BYTES); the arrow/expr impls prefer the
         # default budget (r15 interleaved A/B: 1.48 vs 1.86 s)
         _SPREAD_DENSE_BYTES if signature_impl == "portable" else None,
     ).select(F.col(id_col), shingle_fp(text_col, n).alias("shset"))
-    sh = _memoized_persist(
-        sh_plan, ("minhash_sh", id_col, text_col, n, signature_impl == "portable"), sh_plan
-    )
+    sh = memo.persisted("minhash_sh", sh)
     buckets = minhash_band_buckets(
         sh, id_col=id_col, num_hashes=num_hashes, bands=bands,
         signature_impl=signature_impl,
@@ -515,7 +496,7 @@ def minhash_near_dedup(
         buckets = buckets.join(small, ["band", "bh"])
     left = buckets.alias("a")
     right = buckets.alias("b")
-    cand_plan = (
+    cand = (
         left.join(
             right,
             (F.col("a.band") == F.col("b.band"))
@@ -525,11 +506,7 @@ def minhash_near_dedup(
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
         .distinct()
     )
-    cand = _memoized_persist(
-        cand_plan,
-        ("minhash_cand", id_col, num_hashes, bands, n, signature_impl, max_bucket),
-        cand_plan,
-    )
+    cand = memo.persisted("minhash_cand", cand)
     return jaccard_verify_pairs(
         cand, sh, id_col=id_col, threshold=threshold, hint_verify=hint_verify
     )
@@ -798,7 +775,6 @@ def simhash_near_dedup(
     max_hamming: int = 3,
     signature_impl: str = "expr",
     max_bucket: int | None | str = "auto",
-    cache: bool = True,
 ) -> DataFrame:
     """SimHash near-dedup: block on 16-bit sub-bands (pigeonhole: hamming ≤ 3
     ⇒ at least one of 4 bands identical), verify with bit_count(a XOR b).
@@ -835,21 +811,9 @@ def simhash_near_dedup(
         # the cap needs bucket counts AND the join — without a persist
         # the (CPU-heavy) signature build executes once per consumer.
         # The persisted relation is 16 bytes/doc, storage-trivial even
-        # at corpus scale (measured: 30× sweep 9.4 s → 4.8 s). Routed
-        # through the bounded memo registry (never unpersisted per-call
-        # otherwise — the r11/r12 shared-prep policy). ``cache=False``
-        # takes a per-call persist instead — the rewrite-in-place
-        # caller's opt-out (r13 advice; see minhash_near_dedup).
-        if cache:
-            from .similarity import _memoized_persist
-
-            sig = _memoized_persist(
-                sig, ("simhash_sig", id_col, text_col, signature_impl), sig
-            )
-        else:
-            from pyspark import StorageLevel
-
-            sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+        # at corpus scale (measured: 30× sweep 9.4 s → 4.8 s). Held by
+        # the session memo, like every shared-prep persist.
+        sig = memo.persisted("simhash_sig", sig)
     bands = sig.select(
         id_col,
         "simhash",
@@ -979,18 +943,11 @@ def ngram_jaccard_pairs(
     from pyspark.sql import Window
 
     gram = shingles(text_col, n) if gram_impl == "portable" else shingle_hashes(text_col, n)
-    # persisted THROUGH the bounded memo registry: sh feeds the
-    # block-key stream AND both verify-join sides (sh_a, sh_b) — without
-    # a persist the tokenize+gram projection re-executes per consumer
-    # (the same lineage blowup minhash_near_dedup's persist comment
-    # documents; r11 review found this operator missed the memo). A raw
-    # per-invocation persist pins one session-lifetime cache copy per
-    # CALL (the accumulation class the r11 advice flagged); the shared
-    # registry caps live copies and evicts oldest-first.
-    from .similarity import _memoized_persist
-
-    raw = _spread(df).select(F.col(id_col), gram.alias("shset"))
-    sh = _memoized_persist(raw, ("ngram_sh", id_col, text_col, n, gram_impl), raw)
+    # persisted through the session memo: sh feeds the block-key stream
+    # AND both verify-join sides (sh_a, sh_b) — without a persist the
+    # tokenize+gram projection re-executes per consumer (the same
+    # lineage blowup minhash_near_dedup's persist comment documents).
+    sh = memo.persisted("ngram_sh", _spread(df).select(F.col(id_col), gram.alias("shset")))
     tok = sh.select(F.col(id_col), F.explode("shset").alias("blk"))
     freq = tok.groupBy("blk").agg(F.count(F.lit(1)).alias("doc_freq"))
     ranked = (
@@ -1085,16 +1042,11 @@ def verbatim_spans(
     production path (~1.5× less gram-stage CPU/GC); ``"portable"``
     keeps strings so a SQL twin replays every stage (the registered
     oracle query's mode; equal spans unless xxhash64 collides)."""
-    # persisted THROUGH the bounded memo registry (r11 advice — a raw
-    # persist here pinned one session-lifetime cache copy per call):
-    # starts feeds the gram-df aggregate AND the shared-gram join —
-    # without a persist the positional-gram explode runs twice (r11
-    # review).
-    from .similarity import _memoized_persist
-
-    raw = positional_grams(df, text_col, id_col, gram, gram_impl)
-    starts = _memoized_persist(
-        raw, ("verbatim_starts", id_col, text_col, gram, gram_impl), raw
+    # persisted through the session memo: starts feeds the gram-df
+    # aggregate AND the shared-gram join — without a persist the
+    # positional-gram explode runs twice (r11 review).
+    starts = memo.persisted(
+        "verbatim_starts", positional_grams(df, text_col, id_col, gram, gram_impl)
     )
     gdf = (
         starts.select("g", id_col)

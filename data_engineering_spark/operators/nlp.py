@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf, udtf
 
+from .. import memo
 from .text import tokens
 
 __all__ = [
@@ -161,14 +162,12 @@ def tfidf_keywords(df: DataFrame, id_col: str, text_col: str, top_k: int = 3) ->
         F.length("tok") > 2
     )
     # tf feeds BOTH the document-frequency aggregate and the score join —
-    # persist it or the tokenize+explode pipeline executes twice. Routed
-    # through the bounded memo registry (r12 review): a raw persist here
-    # pinned one session-lifetime cache copy per invocation, the same
-    # accumulation class the r11 advice flagged in the dedup relations.
-    from .similarity import _memoized_persist
-
-    raw_tf = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
-    tf = _memoized_persist(raw_tf, ("tfidf_tf", id_col, text_col), raw_tf)
+    # persist it or the tokenize+explode pipeline executes twice. Held by
+    # the session memo: a raw persist here would pin one session-lifetime
+    # cache copy per invocation.
+    tf = memo.persisted(
+        "tfidf_tf", tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
+    )
     # Corpus size rides along as a broadcast 1-row aggregate instead of a
     # driver-side df.count(): one plan, one job, no extra action.
     n_docs = F.broadcast(df.agg(F.count(F.lit(1)).alias("n_docs")))

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import memo
+
 __all__ = [
     "as_double",
     "dot",
@@ -71,103 +73,6 @@ LATTICE_SCALE = 1_000_000
 # Cauchy-Schwarz, so d²·1e12 < 1e13·1e13·1e12 = 1e38). Structural — a
 # breach means the input was not normalized, and the admit guard raises.
 _LATTICE_NN_CAP = 10**13
-
-# Memoized cache registry for lattice_unit_prep(cache=True): one
-# persisted prep PER DISTINCT (input plan, params), looked up by
-# semanticHash and verified with sameSemantics before reuse (r10
-# advice's memoization option). Each lattice/classifier query
-# re-invocation used to add another session-lifetime MEMORY_AND_DISK
-# copy — across a 50-query sweep over the same parquet that
-# accumulates; with memoization the sweep's repeated invocations share
-# ONE prep per corpus. Eviction (beyond the cap, oldest first) is
-# reserved for genuinely distinct inputs piling up: NOT merely a
-# recompute — unpersisting a prep that an un-executed plan still
-# references dissolves the materialization boundary and re-inlines the
-# interpreted quantize/fold tree into per-PAIR expressions (the 4.5×
-# trap tests/test_plans.py ceilings; a plain FIFO tripped it the first
-# session it ran, three preps deep). Cap 4 distinct corpora in flight
-# keeps that path effectively unreachable in any real sweep.
-# Reuse caveat (same class as Spark's own CacheManager, which already
-# dedupes persists by canonicalized plan): re-reading a path whose
-# files changed mid-session reuses the stale prep — rewrite-in-place
-# corpora should pass cache=False.
-# Cap 24 (was 16/8/4): the registry now serves ELEVEN operator
-# families — lattice preps, ngram_sh, verbatim_starts, tfidf_tf (the
-# r12 persist-routing consolidations), minhash_sh, minhash_cand,
-# simhash_sig, tpch_q15_revenue (the r13 sweep that retired the last
-# raw persists; one minhash_near_dedup call alone occupies 2 slots),
-# plus cls_feats, dsir_feats, bp_chunks (the r14 shared-prep additions;
-# r14 ADVICE flagged the inventory drift) — and the cap must stay ≥
-# the worst-case LIVE slot count or a composite sweep that builds every
-# prep before executing would LRU-unpersist a prep an un-executed
-# returned plan still references, re-inlining the interpreted
-# quantize/shingle tree per pair (the documented 4.5× unpersist trap
-# below). Worst case: 11 families, two of which can hold 2 live slots
-# each (minhash sh+cand; lattice preps keyed per vec column) ≈ 13-15 —
-# 24 keeps the safety margin the r13 resize had. Slots are
-# ≤corpus-projection size, so session growth stays bounded.
-_PREP_CACHE_CAP = 24
-_PREP_CACHE: list[tuple[int | None, DataFrame, tuple, DataFrame]] = []
-# One lock for every registry mutation: concurrent lattice consumers
-# (overlapping streaming foreachBatch threads both call
-# lattice_unit_prep(cache=True)) used to race the unguarded
-# len-check/pop(0) eviction — a pop between another thread's check and
-# pop raises IndexError and fails the QUERY, not just the memo (r11
-# advice). The lock covers lookup+LRU-refresh and insert+evict; the
-# JVM-side persist/unpersist calls inside stay cheap (they register,
-# not materialize).
-_PREP_CACHE_LOCK = __import__("threading").Lock()
-
-
-def _memoized_persist(src: DataFrame, params: tuple, out: DataFrame) -> DataFrame:
-    from pyspark import StorageLevel
-
-    try:
-        h = src.semanticHash()
-    except Exception:  # noqa: BLE001 — hashing is an optimization, never a gate
-        h = None
-    if h is not None:
-        with _PREP_CACHE_LOCK:
-            for entry in list(_PREP_CACHE):
-                eh, esrc, eparams, eprep = entry
-                if eh == h and eparams == params:
-                    try:
-                        if not esrc.sameSemantics(src):
-                            continue
-                        # liveness check: a session-level clearCache() (the
-                        # bench does one between queries; so does the driver
-                        # harness) uncaches the relation UNDERNEATH the
-                        # registry — handing out a stale entry would quietly
-                        # re-inline the quantize tree per pair (the 4.5×
-                        # trap; caught as an order-dependent plan-test red).
-                        # Stale entries are dropped and rebuilt fresh.
-                        if eprep.storageLevel == StorageLevel.NONE:
-                            _PREP_CACHE.remove(entry)
-                            continue
-                        # LRU refresh: a hit is as fresh as a build
-                        _PREP_CACHE.remove(entry)
-                        _PREP_CACHE.append(entry)
-                        return eprep
-                    except Exception:  # noqa: BLE001
-                        pass
-    out = out.persist(StorageLevel.MEMORY_AND_DISK)
-    if h is None:
-        # unhashable source: the entry could never be matched, so
-        # registering it would only burn a cache slot and prematurely
-        # evict a live shared prep (end-of-round review). Persist
-        # unregistered — the pre-memoization per-invocation behavior.
-        return out
-    evicted: list[DataFrame] = []
-    with _PREP_CACHE_LOCK:
-        _PREP_CACHE.append((h, src, params, out))
-        while len(_PREP_CACHE) > _PREP_CACHE_CAP:
-            evicted.append(_PREP_CACHE.pop(0)[3])
-    for prep in evicted:
-        try:
-            prep.unpersist()
-        except Exception:  # noqa: BLE001 — a dead session must not poison the next query
-            pass
-    return out
 
 
 def as_double(col: Column | str) -> Column:
@@ -280,7 +185,6 @@ def lattice_unit_prep(
     vec_col: str,
     out_id: str,
     scale: int = LATTICE_SCALE,
-    cache: bool = False,
 ) -> DataFrame:
     """``(out_id, qv, nn)``: quantize each vector's UNIT DIRECTION to the
     1e-6 integer lattice (``qv[i] = round(xᵢ·scale / ‖x‖)`` as int64) and
@@ -311,16 +215,13 @@ def lattice_unit_prep(
     interpreted transform/fold tree into expressions evaluated once per
     PAIR (measured 96 transform nodes and a 4.5× verify slowdown on the
     100× bucketed dedup). Callers that consume the prep from more than
-    one side of a join pass ``cache=True``: the persisted relation is a
-    hard materialization boundary (consumers see InMemoryTableScan
-    attributes — nothing left to inline), and the quantization runs
-    once per VECTOR, period. MEMORY_AND_DISK, ~(dim·8B + 16B) per row —
-    the same persisted-signature-relation trade the MinHash path uses —
-    MEMOIZED per (input plan, params) in ``_PREP_CACHE``, so repeated
-    lattice-query invocations in one session share one prep per corpus
-    instead of accumulating MEMORY_AND_DISK copies for the session
-    lifetime (r10 advice). ``tests/test_plans.py`` pins the
-    per-pair-inlining ceiling."""
+    one side of a join wrap it in ``memo.persisted``: the persisted
+    relation is a hard materialization boundary (consumers see
+    InMemoryTableScan attributes — nothing left to inline), and the
+    quantization runs once per VECTOR, period. MEMORY_AND_DISK,
+    ~(dim·8B + 16B) per row — the same persisted-signature-relation
+    trade the MinHash path uses — shared per corpus by the session memo.
+    ``tests/test_plans.py`` pins the per-pair-inlining ceiling."""
     p = df.select(
         F.col(id_col).alias(out_id), as_double(vec_col).alias("_v")
     ).withColumn("_s", l2_norm(F.col("_v")))
@@ -351,10 +252,7 @@ def lattice_unit_prep(
             ).cast("long")
         )
     )
-    out = q.withColumn("nn", checked)
-    if cache:
-        out = _memoized_persist(df, (id_col, vec_col, out_id, scale), out)
-    return out
+    return q.withColumn("nn", checked)
 
 
 def lattice_cosine_admit(
@@ -546,7 +444,6 @@ def cosine_near_pairs(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: all (a,b), a<b, with
     lattice cosine ≥ threshold. Membership is decided by
@@ -559,15 +456,10 @@ def cosine_near_pairs(
     admission excludes them anyway, so this is semantics-free, but it
     keeps the quadratic join free of degenerate rows without relying on
     the optimizer pushing the admission's nn conjuncts below the Arrow
-    dot UDF (r10 advice).
-
-    ``cache=False`` opts out of the memoized prep registry: the memo is
-    keyed on the LOGICAL plan, so a corpus whose files are rewritten
-    in place mid-session would silently reuse the stale prep (r11
-    advice — same reuse caveat as Spark's own CacheManager)."""
-    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=cache).filter(
-        F.col("nn") > 0
-    )
+    dot UDF (r10 advice)."""
+    prep = memo.persisted(
+        "lattice_prep", lattice_unit_prep(df, id_col, vec_col, "vec_id")
+    ).filter(F.col("nn") > 0)
     a = prep.select(
         F.col("vec_id").alias("id_a"), F.col("qv").alias("qa"), F.col("nn").alias("na")
     )
@@ -592,7 +484,6 @@ def embedding_near_dedup(
     threshold: float = 0.9,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate resolution: every vector is assigned
     the min id among its cosine-≥-threshold neighborhood (itself included,
@@ -616,11 +507,8 @@ def embedding_near_dedup(
     The pair-join sides pre-filter nn > 0 (semantics-free: the admission
     excludes nn = 0; the self-pair union below still sees EVERY id, so
     zero vectors keep their own-canonical row) — null-row robustness of
-    the Arrow dot must not depend on predicate pushdown (r10 advice).
-
-    ``cache=False`` opts out of the memoized prep registry for
-    rewrite-in-place corpora (r11 advice — see cosine_near_pairs)."""
-    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=cache)
+    the Arrow dot must not depend on predicate pushdown (r10 advice)."""
+    prep = memo.persisted("lattice_prep", lattice_unit_prep(df, id_col, vec_col, "vec_id"))
     nz = prep.filter(F.col("nn") > 0)
     a = nz.select(
         F.col("vec_id").alias("id_a"), F.col("qv").alias("qa"), F.col("nn").alias("na")
@@ -760,7 +648,6 @@ def embedding_near_dedup_bucketed(
     max_bucket: int | None = 256,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cache: bool = True,
 ) -> DataFrame:
     """The 100 TB-safe twin of ``embedding_near_dedup``: banded-LSH
     candidate generation → exact cosine verify on candidates only →
@@ -819,8 +706,7 @@ def embedding_near_dedup_bucketed(
     # nn > 0 pre-filter on the verify sides: semantics-free (admission
     # excludes nn = 0) and keeps null-row robustness off the optimizer;
     # the canonical tail below still unions EVERY id as its own row.
-    # cache=False opt-out for rewrite-in-place corpora (r11 advice).
-    prep = lattice_unit_prep(df, id_col, vec_col, "vec_id", cache=cache)
+    prep = memo.persisted("lattice_prep", lattice_unit_prep(df, id_col, vec_col, "vec_id"))
     nz = prep.filter(F.col("nn") > 0)
     va = nz.select(
         F.col("vec_id").alias("id_a"), F.col("qv").alias("qa"), F.col("nn").alias("na")

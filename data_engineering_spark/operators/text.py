@@ -31,6 +31,7 @@ __all__ = [
     "match_phrase_rank",
     "phrase_merge_rounds",
     "phrase_merge_rounds_batched",
+    "bpe_merge_rows",
     "significant_terms",
     "more_like_this",
     "percolate",
@@ -831,20 +832,10 @@ def chained_replace_kernel(pairs: list[tuple[str, str]]):
     return apply_chain
 
 
-# Session-bounded memo for trained BPE vocabularies: the learned merge
-# table is a DRIVER-LOCAL list (≤ vocab rows — 1024 tuples for the
-# 16×64 production shape), so caching the rows themselves is exact and
-# storage-trivial. Keyed like the lattice prep registry (semanticHash +
-# sameSemantics + params), lock-guarded, capped. Motivation (r11
-# verdict #2): nlp_bpe_vocab_16x64 and nlp_bpe_apply_16x64 each trained
-# the SAME 1024-merge vocab — 56 s + 50 s of a 329 s bench re-deriving
-# identical merges; with the memo the second caller replays the rows.
-# Same reuse caveat as every plan-keyed cache: a corpus rewritten in
-# place mid-session would replay a stale vocab — such callers keep the
-# default memo=False.
-_BPE_VOCAB_MEMO_CAP = 4
-_BPE_VOCAB_MEMO: list[tuple[int, "DataFrame", tuple, list]] = []
-_BPE_VOCAB_MEMO_LOCK = __import__("threading").Lock()
+BPE_MERGE_SCHEMA = (
+    "pass_no int, merge_rank int, left_tok string, right_tok string, "
+    "merged string, pair_count long"
+)
 
 
 def phrase_merge_rounds_batched(
@@ -852,7 +843,6 @@ def phrase_merge_rounds_batched(
     passes: int = 2,
     merges_per_pass: int = 3,
     text_col: str = "text",
-    memo: bool = False,
 ) -> DataFrame:
     """Batched BPE merge learning — the production-vocab trainer shape:
     each COUNT PASS takes the top ``merges_per_pass`` pairs (count-desc,
@@ -873,39 +863,19 @@ def phrase_merge_rounds_batched(
 
     Emits one row per applied merge: (pass_no, merge_rank, left_tok,
     right_tok, merged, pair_count) — pair_count is the count-pass frequency the
-    rank was chosen on, i.e. the pre-batch count.
+    rank was chosen on, i.e. the pre-batch count (``BPE_MERGE_SCHEMA``)."""
+    return df.sparkSession.createDataFrame(
+        list(bpe_merge_rows(df, passes, merges_per_pass, text_col)), BPE_MERGE_SCHEMA
+    )
 
-    ``memo=True`` returns the session-cached merge rows when the same
-    (input plan, passes, merges_per_pass, text_col) was already trained
-    this session — see ``_BPE_VOCAB_MEMO``."""
+
+def bpe_merge_rows(
+    df: DataFrame, passes: int, merges_per_pass: int, text_col: str = "text"
+) -> tuple[tuple, ...]:
+    """The driver-local merge rows of :func:`phrase_merge_rounds_batched`,
+    in (pass_no, merge_rank) order."""
     from pyspark import StorageLevel
 
-    spark = df.sparkSession
-    schema = (
-        "pass_no int, merge_rank int, left_tok string, right_tok string, "
-        "merged string, pair_count long"
-    )
-    params = (passes, merges_per_pass, text_col)
-    h = None
-    if memo:
-        try:
-            h = df.semanticHash()
-        except Exception:  # noqa: BLE001 — memo is an optimization, never a gate
-            h = None
-        if h is not None:
-            with _BPE_VOCAB_MEMO_LOCK:
-                for entry in list(_BPE_VOCAB_MEMO):
-                    eh, esrc, eparams, erows = entry
-                    if eh == h and eparams == params:
-                        try:
-                            if not esrc.sameSemantics(df):
-                                continue
-                        except Exception:  # noqa: BLE001
-                            continue
-                        # LRU refresh
-                        _BPE_VOCAB_MEMO.remove(entry)
-                        _BPE_VOCAB_MEMO.append(entry)
-                        return spark.createDataFrame(erows, schema)
     # deliberately NOT _spread — same small-per-pass-job rationale as
     # phrase_merge_rounds (measured 2.6× slower with the fan-out, r14)
     segdf = df.select(_bpe_seg0(text_col).alias("seg")).persist(
@@ -937,9 +907,4 @@ def phrase_merge_rounds_batched(
     segdf.unpersist()
     if prev is not None:
         prev.unpersist()
-    if memo and h is not None:
-        with _BPE_VOCAB_MEMO_LOCK:
-            _BPE_VOCAB_MEMO.append((h, df, params, out))
-            while len(_BPE_VOCAB_MEMO) > _BPE_VOCAB_MEMO_CAP:
-                _BPE_VOCAB_MEMO.pop(0)
-    return spark.createDataFrame(out, schema)
+    return tuple(out)

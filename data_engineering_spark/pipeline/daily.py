@@ -13,7 +13,7 @@ date is safe end to end.
 
 from __future__ import annotations
 
-from datetime import datetime, timedelta
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -110,7 +110,7 @@ def run_daily(
             "last_order_dt",
         )
     )
-    start = datetime.utcnow()
+    start = datetime.now(timezone.utc)
     cnt = partition_overwrite(mart, f"{warehouse_dir}/t2_cust_mart", "bkup_dt")
     rec = AuditRecord(
         bat_dt=batch_date,

@@ -82,7 +82,7 @@ def run_sql_etl(
     (success_yn='N'), mirroring the reference's try/except→log pattern
     (``AWS_GLUE_ETL.py:137-163``)."""
     start = time.time()
-    now = datetime.now(timezone.utc).replace(tzinfo=None)
+    now = datetime.now(timezone.utc)
     try:
         df = spark.sql(rewrite_redshift_sql(sql_text))
         if mode == "partition_overwrite":
@@ -125,9 +125,9 @@ def write_audit(spark: SparkSession, rec: AuditRecord, audit_dir: str) -> None:
     The row is built in the JVM as typed literals over a one-row range,
     so the write needs no Python worker (a list-built ``createDataFrame``
     ships a pickled Python RDD through them). A naive ``platform_dt``
-    converts the way the list path converts it, as process-local time;
-    the Arrow/pandas path would read it as UTC and shift it under a
-    non-UTC process timezone."""
+    converts the way the list path converts it, as process-local time
+    (the Arrow/pandas path would read it as UTC); the jobs stamp an aware
+    UTC instant, which converts exactly under any process timezone."""
     row = vars(rec)
     spark.range(1, numPartitions=1).select(
         *(F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in AUDIT_SCHEMA.fields)

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from . import memo
 from .catalog import load_table
 from .functions.scalar import (
     case_like_normalize,
@@ -1426,12 +1427,10 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15: top-revenue supplier via a derived revenue table used
     twice (rows + scalar max). The revenue agg is computed once and
     persisted for both uses — no second lineitem scan; supplier
-    broadcasts. The persist routes through the bounded memo registry:
-    a raw per-call persist here is never released (the returned frame
+    broadcasts. The persist goes through the session memo: a raw
+    per-call persist here is never released (the returned frame
     depends on it), so repeated q15 runs in one session would pile up
     dead cache entries."""
-    from data_engineering_spark.operators.similarity import _memoized_persist
-
     l = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
@@ -1441,7 +1440,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_revenue"
         )
     )
-    revenue = _memoized_persist(revenue_plan, ("tpch_q15_revenue",), revenue_plan)
+    revenue = memo.persisted("tpch_q15_revenue", revenue_plan)
     max_rev = revenue.agg(F.max("total_revenue").alias("m"))
     s = _t(spark, sf_dir, "supplier")
     return (

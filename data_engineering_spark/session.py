@@ -18,6 +18,8 @@ Spark confs, chosen for the 100 TB design point:
   explicit INTERVAL op, see ``functions/scalar.py``).
 - Arrow enabled: every pandas_udf / applyInPandas boundary is
   Arrow-vectorized, never row-at-a-time pickling.
+- No humongous per-stage buffers on the driver heap (G1 region size and
+  broadcast block size), so its resident memory does not hinge on GC timing.
 """
 
 from __future__ import annotations
@@ -53,6 +55,20 @@ def get_spark(app_name: str = "data-engineering-spark", cpus: int | None = None)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # Every stage serializes its task binary into a 1 MB chunk and
+        # broadcasts it in spark.broadcast.blockSize chunks (4 MB by
+        # default). On a G1 heap under 8 GB (2 MB regions) both are
+        # humongous objects: each takes old regions of its own and, past
+        # the marking threshold, starts a concurrent cycle with a young
+        # pause. Stage-heavy steps ran dozens of these within a second, and
+        # G1 answers a burst of pauses by growing the heap up to ~1 GB in
+        # one step, so whether a run crossed that line was timing: a 3 GB
+        # driver running one workload peaked at 1.7-1.9 GB resident in most
+        # runs and at 2.3-2.6 GB in others. With 4 MB regions and 1 MB
+        # blocks both are ordinary young objects (humongous-allocation
+        # pauses per run 8-24 -> 0-2; peaks 1.6-2.0 GB).
+        .config("spark.driver.extraJavaOptions", "-XX:G1HeapRegionSize=4m")
+        .config("spark.broadcast.blockSize", "1m")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # iterative ops (pagerank_integer, prefix_sum, canonical

@@ -4,6 +4,8 @@ must not collide."""
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -457,57 +459,61 @@ def test_lattice_null_vector_robustness(spark):
     assert got == [23, 0, 0, 0]
 
 
-def test_lattice_prep_cache_is_memoized_and_bounded(spark):
-    """lattice_unit_prep(cache=True) memoizes per (input plan, params):
-    repeated invocations on the same corpus return the SAME persisted
-    prep (r10 advice: each re-invocation used to add another
-    session-lifetime MEMORY_AND_DISK copy), and only genuinely distinct
-    inputs beyond the cap evict (oldest first)."""
-    from data_engineering_spark.operators import similarity as sim
+def test_lattice_prep_cache_is_memoized_and_bounded(spark, tmp_path, monkeypatch):
+    """The session memo holds one persisted lattice prep per plan: the
+    same plan built again, or an equal plan built separately, hits the
+    one handle; other params miss; past the cap the oldest handle is
+    unpersisted; after clearCache() the rebuild is never uncached by the
+    dead handle it replaces."""
+    from pyspark import StorageLevel
 
-    # drain entries left by earlier tests: at-cap growth is zero-sum
-    # (each add evicts), which would make the +1 assertion below vacuous
-    for entry in list(sim._PREP_CACHE):
-        try:
-            entry[3].unpersist()
-        except Exception:  # noqa: BLE001
-            pass
-    sim._PREP_CACHE.clear()
+    from data_engineering_spark import memo
+    from data_engineering_spark.operators.similarity import lattice_unit_prep
 
+    def prep(src, **kw):
+        return memo.persisted(
+            "lattice_prep", lattice_unit_prep(src, "vec_id", "embedding", "vec_id", **kw)
+        )
+
+    memo.clear()
+    monkeypatch.setattr(memo, "CAP", 3)
     df = spark.createDataFrame(
         [(1, [1.0, 0.0]), (2, [0.0, 1.0])], ["vec_id", "embedding"]
     )
-    # same input + params → the same object, no new cache entry
-    before = len(sim._PREP_CACHE)
-    p1 = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=True)
-    p2 = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=True)
-    assert p2 is p1
-    assert len(sim._PREP_CACHE) == before + 1
-    # different params on the same input do NOT share
-    p3 = sim.lattice_unit_prep(
-        df, "vec_id", "embedding", "vec_id", scale=1000, cache=True
-    )
-    assert p3 is not p1
-    # distinct input plans beyond the cap evict the oldest
-    preps = [
-        sim.lattice_unit_prep(
-            df.filter(F.col("vec_id") >= -i), "vec_id", "embedding", "vec_id",
-            cache=True,
-        )
-        for i in range(1, sim._PREP_CACHE_CAP + 2)
-    ]
-    assert len(sim._PREP_CACHE) <= sim._PREP_CACHE_CAP
-    assert preps[-1].storageLevel.useMemory
-    assert not p1.storageLevel.useMemory  # the oldest entry was evicted
-    # an evicted prep still computes correctly (recompute, never wrong)
-    assert p1.count() == 2
-    # a session-level clearCache() invalidates entries UNDERNEATH the
-    # registry (test_driver_canon / bench both do one): the lookup must
-    # detect the stale entry and rebuild with a live cache, never hand
-    # out an uncached prep whose consumers would re-inline per pair
+    p1 = prep(df)
+    p2 = prep(df)
+    assert p1.storageLevel.useMemory and p2.storageLevel.useMemory
+    assert memo.stats()["lattice_prep"] == {"hits": 1, "misses": 1, "evictions": 0}
+    prep(df, scale=1000)  # other params: a miss
+    assert memo.stats()["lattice_prep"]["misses"] == 2
+    # two more distinct plans: four handles over a cap of three
+    newest = [prep(df.filter(F.col("vec_id") >= -i)) for i in (1, 2)][-1]
+    assert memo.stats()["lattice_prep"]["evictions"] == 1
+    assert newest.storageLevel.useMemory
+    assert p1.storageLevel == StorageLevel.NONE  # the oldest was unpersisted
+    assert p1.count() == 2  # an evicted prep recomputes, never wrong
+
+    # equal plans built separately share one handle
+    memo.clear()
+    path = str(tmp_path / "vecs")
+    df.write.parquet(path)
+    prep(spark.read.parquet(path))
+    assert prep(spark.read.parquet(path)).storageLevel.useMemory
+    assert memo.stats()["lattice_prep"] == {"hits": 1, "misses": 1, "evictions": 0}
+
+    # clearCache() kills the handle underneath the memo; the rebuild is a
+    # miss, and two more entries (which would evict a still-held dead
+    # handle, and with it the rebuild's equal plan) leave it cached
+    memo.clear()
+    dead = prep(df)
     spark.catalog.clearCache()
-    p4 = sim.lattice_unit_prep(df, "vec_id", "embedding", "vec_id", cache=True)
-    assert p4.storageLevel.useMemory
+    assert dead.storageLevel == StorageLevel.NONE
+    rebuilt = prep(df)
+    prep(df, scale=1000)
+    prep(df, scale=2000)
+    assert rebuilt.storageLevel.useMemory
+    assert memo.stats()["lattice_prep"] == {"hits": 0, "misses": 4, "evictions": 0}
+    memo.clear()
 
 
 def test_lattice_admit_guards(spark):
@@ -1442,30 +1448,41 @@ def test_lsh_buckets_pandas_null_and_ragged_rows_drop_cleanly(spark):
     assert {r.vec_id for r in exploded.collect()} == {1, 2}
 
 
-def test_near_dedup_cache_optout_bypasses_registry(spark, planted):
-    """minhash/simhash_near_dedup(cache=False) must not register their
-    shared-prep persists in the session memo registry (the r13 advice's
-    rewrite-in-place caller: a same-plan re-run over rewritten files
-    must re-read fresh), while producing the same pairs as the default
-    cached path."""
-    from data_engineering_spark.operators import similarity as sim
+def test_near_dedup_rewrite_in_place_reads_fresh(spark, tmp_path):
+    """A corpus rewritten in place gives fresh pairs under the session
+    memo: through Spark's own overwrite with no further step, and from
+    outside Spark after ``spark.catalog.refreshByPath``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    want_mh = {
-        (r.id_a, r.id_b) for r in minhash_near_dedup(planted, threshold=0.5).collect()
-    }
-    want_sh = {
-        (r.id_a, r.id_b) for r in simhash_near_dedup(planted).collect()
-    }
-    before = [id(e[3]) for e in sim._PREP_CACHE]
-    got_mh = {
-        (r.id_a, r.id_b)
-        for r in minhash_near_dedup(planted, threshold=0.5, cache=False).collect()
-    }
-    got_sh = {
-        (r.id_a, r.id_b)
-        for r in simhash_near_dedup(planted, cache=False).collect()
-    }
-    assert got_mh == want_mh
-    assert got_sh == want_sh
-    # no new registry entries from the cache=False calls
-    assert [id(e[3]) for e in sim._PREP_CACHE] == before
+    base = (
+        "the quick brown fox jumps over the lazy dog while the cat watches "
+        "from the warm windowsill and the birds sing in the garden outside"
+    )
+    other = (
+        "completely different content about distributed query engines and "
+        "columnar storage with vectorized execution and shuffle services"
+    )
+    path = str(tmp_path / "corpus")
+
+    def pairs():
+        out = minhash_near_dedup(spark.read.parquet(path), threshold=0.5)
+        return sorted((r.id_a, r.id_b) for r in out.collect())
+
+    spark.createDataFrame(
+        [(1, base), (2, base), (3, other)], "doc_id long, text string"
+    ).write.parquet(path)
+    assert pairs() == [(1, 2)]
+    spark.createDataFrame(
+        [(1, base), (2, other), (3, base)], "doc_id long, text string"
+    ).write.mode("overwrite").parquet(path)
+    assert pairs() == [(1, 3)]
+    for f in os.listdir(path):
+        if f.endswith(".parquet"):
+            os.remove(os.path.join(path, f))
+    pq.write_table(
+        pa.table({"doc_id": pa.array([1, 2, 3], pa.int64()), "text": [other, base, base]}),
+        os.path.join(path, "part-0.parquet"),
+    )
+    spark.catalog.refreshByPath(path)
+    assert pairs() == [(2, 3)]

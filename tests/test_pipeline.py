@@ -280,6 +280,52 @@ def test_write_audit_row_matches_list_path_under_non_utc_process(tmp_path):
         assert r["got"] == r["want"] and len(r["got"]) == 2, tz
 
 
+_AUDIT_INSTANT_SCRIPT = r"""
+import json, sys, tempfile, time
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import functions as F
+from data_engineering_spark.pipeline.etl import run_sql_etl
+from data_engineering_spark.session import get_spark
+
+spark = get_spark("audit-instant", cpus=1)
+spark.sparkContext.setLogLevel("ERROR")
+out = {}
+for tz in ("UTC", "Asia/Seoul"):
+    spark.conf.set("spark.sql.session.timeZone", tz)
+    audit = tempfile.mkdtemp()
+    rec = run_sql_etl(spark, "select 1 as x", tempfile.mkdtemp() + "/t1_x",
+                      job_nm="t1.x", bat_dt="20240110", audit_dir=audit)
+    us = spark.read.parquet(audit).select(F.unix_micros("platform_dt")).first()[0]
+    out[tz] = {"success_yn": rec.success_yn, "skew_s": us / 1e6 - time.time()}
+print("AUDIT_INSTANT " + json.dumps(out))
+"""
+
+
+def test_run_sql_etl_audit_instant_under_non_utc_process(tmp_path):
+    """``run_sql_etl`` records the real run instant in ``platform_dt``
+    in a process whose own timezone is America/New_York, in UTC and
+    Asia/Seoul sessions (a naive UTC wall clock lands 4-5 h off)."""
+    import json
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "audit_instant.py"
+    script.write_text(_AUDIT_INSTANT_SCRIPT)
+    env = dict(os.environ, TZ="America/New_York")
+    proc = subprocess.run(
+        [sys.executable, str(script), root], env=env, cwd=tmp_path,
+        capture_output=True, text=True, timeout=600,
+    )
+    line = [ln for ln in proc.stdout.splitlines() if ln.startswith("AUDIT_INSTANT ")]
+    assert line, proc.stderr[-3000:]
+    out = json.loads(line[0][len("AUDIT_INSTANT "):])
+    assert set(out) == {"UTC", "Asia/Seoul"}
+    for tz, r in out.items():
+        assert r["success_yn"] == "Y", tz
+        assert abs(r["skew_s"]) < 60, (tz, r)
+
+
 # Jobs of one non-weekly run_daily at the test SF (measured): 4 view
 # footer reads; per t1 table, its aggregate write (shuffle stage + write)
 # and its audit row (3 + 3); for the mart, the footer read of t1's

@@ -424,11 +424,14 @@ def test_phrase_merge_batched_stale_counts_and_sequential_apply(spark):
 
 
 def test_bpe_vocab_memo_replays_and_keys_on_corpus(spark):
-    """memo=True must (a) return the identical merge table on a repeat
-    call without retraining (observed via the memo registry), (b) MISS
-    when the corpus plan differs, and (c) leave the registry untouched
-    at the default memo=False."""
-    import data_engineering_spark.operators.text as T
+    """The session memo returns the trained merge rows on a repeat call
+    without retraining, and misses on another corpus plan or other
+    params."""
+    from data_engineering_spark import memo
+    from data_engineering_spark.operators.text import (
+        bpe_merge_rows,
+        phrase_merge_rounds_batched,
+    )
 
     df = spark.createDataFrame(
         [(i, "new york city is in new york state") for i in range(5)],
@@ -437,26 +440,26 @@ def test_bpe_vocab_memo_replays_and_keys_on_corpus(spark):
     other = spark.createDataFrame(
         [(1, "san francisco bay area san francisco")], "doc_id long, text string"
     )
-    T._BPE_VOCAB_MEMO.clear()
-    cold = [tuple(r) for r in T.phrase_merge_rounds_batched(
-        df, passes=2, merges_per_pass=2, memo=True).collect()]
-    assert len(T._BPE_VOCAB_MEMO) == 1
-    cached_rows = T._BPE_VOCAB_MEMO[0][3]
-    # poison-pill the cached list's identity check: a HIT must come from
-    # the registry (same object), a retrain would rebuild a fresh list
-    warm_df = T.phrase_merge_rounds_batched(df, passes=2, merges_per_pass=2, memo=True)
-    assert T._BPE_VOCAB_MEMO[0][3] is cached_rows and len(T._BPE_VOCAB_MEMO) == 1
-    assert [tuple(r) for r in warm_df.collect()] == cold
-    # different corpus → miss → second entry
-    T.phrase_merge_rounds_batched(other, passes=2, merges_per_pass=2, memo=True)
-    assert len(T._BPE_VOCAB_MEMO) == 2
-    # different params on the same corpus → miss
-    T.phrase_merge_rounds_batched(df, passes=1, merges_per_pass=2, memo=True)
-    assert len(T._BPE_VOCAB_MEMO) == 3
-    # default memo=False neither reads nor writes the registry
-    T._BPE_VOCAB_MEMO.clear()
-    T.phrase_merge_rounds_batched(df, passes=1, merges_per_pass=1).collect()
-    assert T._BPE_VOCAB_MEMO == []
+    trained = []
+
+    def vocab(src, passes):
+        def train():
+            trained.append(passes)
+            return bpe_merge_rows(src, passes, 2)
+
+        return memo.value("bpe_vocab", src, (passes, 2), train)
+
+    memo.clear()
+    cold = vocab(df, 2)
+    assert cold == tuple(
+        tuple(r) for r in phrase_merge_rounds_batched(df, passes=2, merges_per_pass=2).collect()
+    )
+    assert vocab(df, 2) is cold and trained == [2]
+    vocab(other, 2)
+    vocab(df, 1)
+    assert trained == [2, 2, 1]
+    assert memo.stats()["bpe_vocab"] == {"hits": 1, "misses": 3, "evictions": 0}
+    memo.clear()
 
 
 def test_dedup_aware_split_never_straddles_clusters(spark):

@@ -51,3 +51,23 @@ def test_arrow_kernel_runs_from_any_cwd(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-4000:]
     assert "neighbors [2, 2, 3]" in out.stdout, out.stdout
+
+
+def test_driver_stage_buffers_are_not_humongous(spark):
+    """``get_spark`` launches the driver JVM with G1 regions and broadcast
+    blocks sized so that a stage's 1 MB task-binary chunk and each of its
+    broadcast blocks stay under half a region: ordinary young objects,
+    not humongous ones that start a concurrent cycle each."""
+    jvm = spark.sparkContext._jvm
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    region = bean.getVMOption("G1HeapRegionSize")
+    assert region.getOrigin().toString() == "VM_CREATION"  # set, not derived from the heap size
+    half = int(region.getValue()) // 2
+    block = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.sparkContext.getConf().get("spark.broadcast.blockSize")
+    )
+    array_header = 16
+    assert 2**20 + array_header < half
+    assert block + array_header < half

@@ -171,8 +171,8 @@ def test_classify_lookup_frames_equal_list_built(spark, local_frames):
     rows = [(i, f"theorem proof lemma v{i % 3}", 1) for i in range(10)]
     rows += [(i, f"buy cheap pills w{i % 3}", -1) for i in range(10, 20)]
     docs = spark.createDataFrame(rows, ["doc_id", "text", "y"])
-    w, _ = classify.train_perceptron(docs, F.col("y"), iterations=3, buckets=32, cache=False)
-    scored = classify.classifier_margins(docs, w, buckets=32, cache=False)
+    w, _ = classify.train_perceptron(docs, F.col("y"), iterations=3, buckets=32)
+    scored = classify.classifier_margins(docs, w, buckets=32)
     labels = docs.select("doc_id", "y")
     assert classify.operating_curve(scored, labels, n_bins=4).count() == 3
     assert classify.operating_curve(scored, labels.filter("y = 0"), n_bins=4).count() == 0

@@ -97,11 +97,9 @@ def main() -> None:
             pass
         spark.catalog.clearCache()
         if name in TRAINER_SINGLE_RUN:
-            from data_engineering_spark.operators.classify import _WEIGHTS_MEMO
-            from data_engineering_spark.operators.text import _BPE_VOCAB_MEMO
+            from data_engineering_spark import memo
 
-            _BPE_VOCAB_MEMO.clear()
-            _WEIGHTS_MEMO.clear()
+            memo.clear()
             n_runs = 1
         else:
             n_runs = runs
