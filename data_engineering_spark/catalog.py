@@ -17,8 +17,10 @@ from __future__ import annotations
 
 import os
 from contextlib import contextmanager
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -53,8 +55,66 @@ __all__ = [
 _LAYOUT_OVERRIDES: dict[tuple[str, str], str] = {}
 
 
+# table path → (file fingerprint, inferred schema): the last schema
+# Spark inferred for the file set at that path. One slot per path, so
+# the count is bounded by the number of table paths read; deliberately
+# not in memo.py, whose cap exists to release persisted preps.
+_SCHEMA_SLOTS: dict[str, tuple[tuple, T.StructType]] = {}
+# Session confs that change how Parquet types convert to Spark types.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
+
+
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
+
+
+def _fingerprint(spark: SparkSession, path: str) -> tuple | None:
+    """The path, then (relative name, size, ``mtime_ns``) of every file
+    under it, then the values of ``_SCHEMA_CONFS``; None for a path that
+    is not on the local filesystem (stat-ing remote objects is not free)
+    or holds no file. Driver-side metadata only — no Spark job."""
+    u = urlparse(path)
+    if u.scheme not in ("", "file"):
+        return None
+    root = unquote(u.path)
+    if os.path.isfile(root):
+        st = os.stat(root)
+        files = [("", st.st_size, st.st_mtime_ns)]
+    else:
+        files = []
+        for d, dirs, names in os.walk(root):
+            dirs.sort()
+            for n in sorted(names):
+                st = os.stat(os.path.join(d, n))
+                files.append((os.path.relpath(os.path.join(d, n), root), st.st_size, st.st_mtime_ns))
+    if not files:
+        return None
+    return (path, tuple(files), tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (a Spark job
+    reading the footers) only when the path's fingerprint differs from
+    the one stored with its slot; otherwise it reads with the stored
+    schema, which runs no job. A Spark overwrite, an outside rewrite or
+    a flipped type-conversion conf changes the fingerprint."""
+    fp = _fingerprint(spark, path)
+    slot = _SCHEMA_SLOTS.get(path)
+    if fp is not None and slot is not None and slot[0] == fp:
+        return spark.read.schema(slot[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if fp is not None:
+        # fingerprinted before the read: a rewrite racing the inference
+        # leaves a stale fingerprint, never a stale schema
+        _SCHEMA_SLOTS[path] = (fp, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -72,6 +132,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       TimestampType. The session TZ is pinned UTC (``session.py:67``) so
       values are preserved and the schema matches the oracle's.
     - ``TimestampType``: passthrough.
+
+    Each table's schema is inferred once per file set (``_read_parquet``).
     """
     override = _LAYOUT_OVERRIDES.get((sf_dir, name))
     if override is not None:
@@ -81,14 +143,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
-        df = spark.read.parquet(table_path(sf_dir, name))
+        df = _read_parquet(spark, table_path(sf_dir, name))
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
         if isinstance(ts_type, TimestampNTZType):
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_parquet(spark, table_path(sf_dir, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

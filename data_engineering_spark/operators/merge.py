@@ -9,8 +9,9 @@ as joins so Catalyst plans them distributed:
 - ``merge_upsert`` — SQL MERGE semantics (update matched, insert
   unmatched) via a single full-outer join on the key.
 - ``apply_cdc`` — collapse a Debezium-shaped change feed (op ∈
-  I/U/D + sequence column) to the latest op per key, then merge it:
-  the batch form of Structured Streaming's foreachBatch CDC sink.
+  I/U/D + sequence column) to the latest op per key, then apply it to
+  the target in one full-outer join that drops the deleted keys: the
+  batch form of Structured Streaming's foreachBatch CDC sink.
 - ``scd2_apply`` — slowly-changing-dimension type 2: close changed
   rows, insert new versions, keep history queryable by validity range.
 
@@ -126,18 +127,23 @@ def apply_cdc(
     This is the batch twin of a streaming CDC sink: run it per
     micro-batch over foreachBatch with the same semantics.
 
+    Shape: a latest-wins window collapses the feed to one row per key,
+    keeping its op; ONE full-outer join with the target follows, rows
+    whose op is 'D' drop out, and the payload comes from the feed
+    wherever an op is present. The window's key partitioning feeds the
+    join, so the plan shuffles the feed and the target once each.
+
     A malformed op (NULL or outside I/U/D) raises instead of vanishing:
-    three-valued logic made a NULL-op row fail BOTH the ``!= 'D'`` and
-    ``== 'D'`` filters, so the latest change for a key could silently
-    disappear from the merge (r11 warehouse review #4).
+    the join reads a NULL op as "no change for this key", so the latest
+    change for a key could silently disappear (r11 warehouse review #4).
 
     Determinism contract (r13 cycle-2 note): latest-wins is total only
     when ``(keys, seq_col, op_col)`` is unique in the feed — two changes
     sharing key+seq+op but differing in payload tie in the window and
     the survivor is engine-/run-dependent (every CDC consumer shares
-    this; real feeds carry a unique per-key sequence). The downstream
-    ``merge_upsert`` guard cannot catch it either: latest-wins has
-    already collapsed the feed to one row per key."""
+    this; real feeds carry a unique per-key sequence). No duplicate-key
+    guard can catch it: latest-wins has already collapsed the feed to
+    one row per key."""
     from pyspark.sql import Window
 
     payload = [c for c in target.columns if c not in keys]
@@ -158,12 +164,22 @@ def apply_cdc(
     latest = (
         changes.withColumn("__rn__", F.row_number().over(w))
         .filter(F.col("__rn__") == 1)
-        .drop("__rn__")
+        .select(*keys, F.col(op_col).alias("__op__"), *payload)
+        .alias("s")
     )
-    upserts = latest.filter(F.col(op_col) != "D").select(*keys, *payload)
-    deletes = latest.filter(F.col(op_col) == "D").select(*keys)
-    survived = target.join(deletes, on=keys, how="left_anti")
-    return merge_upsert(survived, upserts, keys)
+    # one row per key on the feed side, so the join cannot fan out and
+    # needs no duplicate-key guard (merge_upsert's); the window's key
+    # partitioning and order are reused by the join
+    op = F.col("s.__op__")
+    joined = target.alias("t").join(latest, on=keys, how="full_outer")
+    out = joined.filter(~op.eqNullSafe("D")).select(
+        *keys,
+        *[
+            F.when(op.isNotNull(), F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
+            for c in payload
+        ],
+    )
+    return out.select(*target.columns)
 
 
 def scd2_apply(

@@ -13,6 +13,7 @@ date is safe end to end.
 
 from __future__ import annotations
 
+from collections.abc import Iterator
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import SparkSession
@@ -68,9 +69,30 @@ def run_daily(
     Registers temp views for exactly the tables the tiers read by name
     (``DAG_VIEWS``: orders, lineitem, customer, nation), not the whole
     catalog; the serving index loads its own tables.
+
+    The audit rows land in one append (one job) after the last tier,
+    also when a tier raises: the rows of the tiers that finished are
+    kept and the error propagates.
     """
-    audit_dir = f"{warehouse_dir}/audit_log"
     records: list[AuditRecord] = []
+    try:
+        for rec in _tiers(spark, sf_dir, warehouse_dir, batch_date, weekly, keep_days):
+            records.append(rec)
+    finally:
+        write_audit(spark, records, f"{warehouse_dir}/audit_log")
+    return records
+
+
+def _tiers(
+    spark: SparkSession,
+    sf_dir: str,
+    warehouse_dir: str,
+    batch_date: str,
+    weekly: bool,
+    keep_days: int,
+) -> Iterator[AuditRecord]:
+    """The tiers of ``run_daily``, yielding each tier's audit record as
+    the tier finishes."""
     for name in DAG_VIEWS:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
@@ -82,11 +104,10 @@ def run_daily(
             f"{warehouse_dir}/{table}",
             job_nm=f"t1.{table}",
             bat_dt=batch_date,
-            audit_dir=audit_dir,
         )
-        records.append(rec)
+        yield rec
         if rec.success_yn != "Y":
-            return records  # downstream tiers depend on t1
+            return  # downstream tiers depend on t1
 
     # ---- t2: customer mart joining t1 output with dims, replacing ONE
     # date partition (BkupRs.py:272-280 semantics)
@@ -123,8 +144,7 @@ def run_daily(
         error_msg="",
         platform_dt=start,
     )
-    write_audit(spark, rec, audit_dir)
-    records.append(rec)
+    yield rec
 
     # ---- retention: drop mart partitions older than keep_days
     # Real calendar arithmetic: integer subtraction on yyyyMMdd strings
@@ -153,7 +173,4 @@ def run_daily(
             error_msg="",
             platform_dt=start,
         )
-        write_audit(spark, rec, audit_dir)
-        records.append(rec)
-
-    return records
+        yield rec

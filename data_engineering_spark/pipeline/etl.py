@@ -10,6 +10,7 @@ a parquet table — steps 3/4 of SURVEY §3.1 collapse into Catalyst.
 from __future__ import annotations
 
 import time
+from collections.abc import Sequence
 from dataclasses import dataclass
 from datetime import datetime, timedelta, timezone
 
@@ -115,23 +116,32 @@ def run_sql_etl(
             platform_dt=now,
         )
     if audit_dir:
-        write_audit(spark, rec, audit_dir)
+        write_audit(spark, [rec], audit_dir)
     return rec
 
 
-def write_audit(spark: SparkSession, rec: AuditRecord, audit_dir: str) -> None:
-    """Append-only audit write (``comlib.py:386-407``): one file, one job.
+def write_audit(spark: SparkSession, records: Sequence[AuditRecord], audit_dir: str) -> None:
+    """Append-only audit write (``comlib.py:386-407``): all ``records``
+    in one file, one job; an empty sequence writes nothing.
 
-    The row is built in the JVM as typed literals over a one-row range,
-    so the write needs no Python worker (a list-built ``createDataFrame``
-    ships a pickled Python RDD through them). A naive ``platform_dt``
-    converts the way the list path converts it, as process-local time
-    (the Arrow/pandas path would read it as UTC); the jobs stamp an aware
-    UTC instant, which converts exactly under any process timezone."""
-    row = vars(rec)
-    spark.range(1, numPartitions=1).select(
-        *(F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in AUDIT_SCHEMA.fields)
-    ).write.mode("append").parquet(audit_dir)
+    The rows are built in the JVM as an inlined array of typed literal
+    structs over a one-row range, so the write needs no Python worker (a
+    list-built ``createDataFrame`` ships a pickled Python RDD through
+    them). A naive ``platform_dt`` converts the way the list path
+    converts it, as process-local time (the Arrow/pandas path would read
+    it as UTC); the jobs stamp an aware UTC instant, which converts
+    exactly under any process timezone."""
+    if not records:
+        return
+    rows = [
+        F.struct(
+            *(F.lit(vars(rec)[f.name]).cast(f.dataType).alias(f.name) for f in AUDIT_SCHEMA.fields)
+        )
+        for rec in records
+    ]
+    spark.range(1, numPartitions=1).select(F.inline(F.array(*rows))).write.mode(
+        "append"
+    ).parquet(audit_dir)
 
 
 def set_nullable_for_columns(schema: T.StructType, nullable: bool = True) -> T.StructType:

@@ -2029,8 +2029,8 @@ def q_m2_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/merge.py:apply_cdc): per key the latest (seq, op) wins —
     seq-1 updates every 5th order, seq-2 re-updates every 20th, seq-3
     deletes every 15th (overriding earlier updates for those keys). The
-    window collapse + delete-anti-join + merge all verify against the
-    oracle's replay."""
+    window collapse + one full-outer join verify against the oracle's
+    replay, which keeps the delete-anti-join + merge form."""
     from .operators.merge import apply_cdc
 
     tgt = _t(spark, sf_dir, "orders").select(

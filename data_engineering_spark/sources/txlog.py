@@ -592,9 +592,12 @@ class LakeTable:
         return snap.version + 1
 
     def compact(self, target_partitions: int = 1) -> int:
-        """Rewrite the current live set into ``target_partitions`` files
-        (per partition value on a partitioned table) in one remove+add
-        commit. Old versions still time-travel.
+        """Rewrite the current live set into at most ``target_partitions``
+        files (per partition value on a partitioned table) in one
+        remove+add commit. Old versions still time-travel. The live set
+        is coalesced, not repartitioned: the rewrite is one job with no
+        shuffle, and fewer input partitions than ``target_partitions``
+        give that many files.
 
         The partition LAYOUT survives compaction (the _rewrite_where
         pattern): re-staging unpartitioned silently stripped every
@@ -625,7 +628,7 @@ class LakeTable:
             )
         partition_by = list(next(iter(part_key_sets))) or None
         actions = [{"remove": {"path": p}} for p in snap.files] + self._stage(
-            live.repartition(target_partitions), partition_by
+            live.coalesce(target_partitions), partition_by
         )
         if not self._try_commit(snap.version + 1, actions):
             raise ConcurrentWriteError(

@@ -22,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def jobs_of(spark):
+    """``jobs_of(fn)`` runs ``fn()`` in a Spark job group of its own and
+    returns ``(fn's result, the ids of the jobs it ran)``."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        gid = f"test-jobs-{os.urandom(4).hex()}"
+        sc.setJobGroup(gid, "counted")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, sorted(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return run

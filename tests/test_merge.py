@@ -229,3 +229,64 @@ def test_scd2_null_is_current_rows_survive_as_history(spark):
     assert len(limbo) == 1 and limbo[0].is_current is None  # untouched
     # the update for key 2 found no CURRENT row → inserts as brand-new
     assert any(r.k == 2 and r.attr == "B2" and r.is_current for r in out)
+
+
+def _apply_cdc_four_step(target, changes, keys, op_col="op", seq_col="seq"):
+    """The former ``apply_cdc``, kept as the reference: a latest-wins
+    window, an upsert and a delete branch, a left-anti of the target
+    against the deletes, then ``merge_upsert`` (with its duplicate-key
+    guard)."""
+    from pyspark.sql import Window
+
+    payload = [c for c in target.columns if c not in keys]
+    w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc(), F.col(op_col).desc())
+    latest = (
+        changes.withColumn("__rn__", F.row_number().over(w))
+        .filter(F.col("__rn__") == 1)
+        .drop("__rn__")
+    )
+    upserts = latest.filter(F.col(op_col) != "D").select(*keys, *payload)
+    deletes = latest.filter(F.col(op_col) == "D").select(*keys)
+    survived = target.join(deletes, on=keys, how="left_anti")
+    return merge_upsert(survived, upserts, keys)
+
+
+@pytest.mark.parametrize("ansi", [True, False])
+def test_apply_cdc_one_join_matches_four_step_reference(spark, ansi):
+    """Randomized feeds over a two-column key: NULL key parts, NULL
+    ``seq``, deletes and updates of absent keys, duplicate target keys
+    and all-NULL payloads. ``seq`` values are unique and each key has
+    at most one NULL-``seq`` change, so latest-wins is total and both
+    forms must give the same multiset of rows."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(1019 + ansi)
+    keyspace = [(k1, k2) for k1 in (None, 1, 2, 3) for k2 in (None, "x")]
+    absent = [(7, "x"), (8, None)]
+    payloads = [(None, None), (1, None), (None, "p"), (2, "q")]
+    t_schema = "k1 long, k2 string, a long, b string"
+    c_schema = "k1 long, k2 string, seq long, op string, a long, b string"
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", str(ansi).lower())
+    try:
+        for _ in range(6):
+            tgt = [(*rng.choice(keyspace), *rng.choice(payloads)) for _ in range(rng.randint(0, 10))]
+            seqs = iter(rng.sample(range(1000), 16))
+            null_seq_keys = set()
+            feed = []
+            for _ in range(rng.randint(0, 14)):
+                key = rng.choice(keyspace + absent)
+                seq = next(seqs)
+                if key not in null_seq_keys and rng.random() < 0.2:
+                    null_seq_keys.add(key)
+                    seq = None
+                feed.append((*key, seq, rng.choice("IUD"), *rng.choice(payloads)))
+            t = spark.createDataFrame(tgt, t_schema)
+            ch = spark.createDataFrame(feed, c_schema)
+            keys = ["k1", "k2"]
+            got = Counter(map(tuple, apply_cdc(t, ch, keys).collect()))
+            want = Counter(map(tuple, _apply_cdc_four_step(t, ch, keys).collect()))
+            assert got == want, (tgt, feed)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)

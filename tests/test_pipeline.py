@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_spark.catalog import register_views
@@ -218,7 +219,7 @@ def test_writer_count_is_rows_on_disk_for_random_filter(spark, tmp_path):
 
 
 _AUDIT_TWIN_SCRIPT = r"""
-import json, sys, tempfile
+import json, os, sys, tempfile
 from datetime import datetime
 sys.path.insert(0, sys.argv[1])
 from pyspark.sql import functions as F
@@ -237,10 +238,10 @@ out = {}
 for tz in ("UTC", "Asia/Seoul"):
     spark.conf.set("spark.sql.session.timeZone", tz)
     got, want = tempfile.mkdtemp(), tempfile.mkdtemp()
-    for rec in recs:
-        write_audit(spark, rec, got)
-        spark.createDataFrame([vars(rec)], schema=AUDIT_SCHEMA).coalesce(1).write.mode(
-            "append").parquet(want)
+    write_audit(spark, recs, got)
+    write_audit(spark, [], got)
+    spark.createDataFrame([vars(rec) for rec in recs], schema=AUDIT_SCHEMA).coalesce(1).write.mode(
+        "append").parquet(want)
     rows = []
     for d in (got, want):
         df = spark.read.parquet(d)
@@ -249,16 +250,18 @@ for tz in ("UTC", "Asia/Seoul"):
             for r in df.select("*", F.unix_micros("platform_dt").alias("us")).collect()
         ))
     out[tz] = {"schema": spark.read.parquet(got).schema == AUDIT_SCHEMA,
+               "files": sorted(f for f in os.listdir(got) if f.endswith(".parquet")),
                "got": rows[0], "want": rows[1]}
 print("AUDIT_TWIN " + json.dumps(out))
 """
 
 
 def test_write_audit_row_matches_list_path_under_non_utc_process(tmp_path):
-    """The JVM-literal audit row equals the old list-built row, including
+    """The JVM-literal audit rows equal the list-built rows, including
     ``unix_micros(platform_dt)``, in UTC and Asia/Seoul sessions of a
     process whose own timezone is America/New_York (where the Arrow path
-    would shift the naive timestamp)."""
+    would shift the naive timestamp). Two records land in one file; an
+    empty sequence writes none."""
     import json
     import subprocess
     import sys
@@ -277,6 +280,7 @@ def test_write_audit_row_matches_list_path_under_non_utc_process(tmp_path):
     assert set(out) == {"UTC", "Asia/Seoul"}
     for tz, r in out.items():
         assert r["schema"], tz
+        assert len(r["files"]) == 1, (tz, r["files"])
         assert r["got"] == r["want"] and len(r["got"]) == 2, tz
 
 
@@ -326,37 +330,140 @@ def test_run_sql_etl_audit_instant_under_non_utc_process(tmp_path):
         assert abs(r["skew_s"]) < 60, (tz, r)
 
 
-# Jobs of one non-weekly run_daily at the test SF (measured): 4 view
-# footer reads; per t1 table, its aggregate write (shuffle stage + write)
-# and its audit row (3 + 3); for the mart, the footer read of t1's
-# output, its write (two broadcast builds + write) and its audit row (5).
-DAILY_JOB_BUDGET = 15
+# Jobs of one non-weekly run_daily at the test SF with empty schema
+# slots (measured): 4 view footer reads; per t1 table, its aggregate
+# write (shuffle stage + write: 2 + 2); for the mart, the footer read of
+# t1's output and its write (two broadcast builds + write: 4); one audit
+# append for all three rows (1).
+DAILY_JOB_BUDGET = 13
 
 
-def test_run_daily_job_budget_and_no_python_workers(spark, sf_dir, tmp_path):
-    """A batch day runs at most ``DAILY_JOB_BUDGET`` Spark jobs and no
-    stage runs a PythonRDD: a re-read count, a re-executed count or a
-    list-built row fails here."""
-    from data_engineering_spark.pipeline.daily import run_daily
-
+def _python_stages(spark, jobs):
+    """(job, stage) of every stage of ``jobs`` that ran a PythonRDD.
+    Skipped stages (a reused shuffle) ran nothing and have no graph; the
+    status store also evicts them first once it holds more than
+    ``spark.ui.retainedStages``, so a long session may no longer know
+    them at all. The stages that ran are the newest and stay."""
     sc = spark.sparkContext
-    gid = "test-run-daily-budget"
-    sc.setJobGroup(gid, "run_daily job budget")
-    try:
-        recs = run_daily(spark, sf_dir, str(tmp_path / "wh"), "20240110", weekly=False)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert all(r.success_yn == "Y" for r in recs)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(gid)
-    assert 0 < len(jobs) <= DAILY_JOB_BUDGET, sorted(jobs)
     store = sc._jsc.sc().statusStore()
     graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
-    python_stages = []
+    out = []
     for j in jobs:
         ids = store.job(j).stageIds()
         for i in range(ids.size()):
-            dot = graph.makeDotFile(store.operationGraphForStage(ids.apply(i)))
-            if "PythonRDD" in dot:
-                python_stages.append((j, ids.apply(i)))
-    assert python_stages == []
+            sid = ids.apply(i)
+            if sc.statusTracker().getStageInfo(sid) is None:
+                continue
+            if store.lastStageAttempt(sid).status().toString() == "SKIPPED":
+                continue
+            if "PythonRDD" in graph.makeDotFile(store.operationGraphForStage(sid)):
+                out.append((j, sid))
+    return out
+
+
+def test_run_daily_job_budget_and_no_python_workers(spark, sf_dir, tmp_path, jobs_of):
+    """A batch day runs at most ``DAILY_JOB_BUDGET`` Spark jobs and no
+    stage runs a PythonRDD: a re-read count, a re-executed count or a
+    list-built row fails here."""
+    from data_engineering_spark import catalog
+    from data_engineering_spark.pipeline.daily import run_daily
+
+    catalog._SCHEMA_SLOTS.clear()
+    recs, jobs = jobs_of(
+        lambda: run_daily(spark, sf_dir, str(tmp_path / "wh"), "20240110", weekly=False)
+    )
+    assert all(r.success_yn == "Y" for r in recs)
+    assert 0 < len(jobs) <= DAILY_JOB_BUDGET, (len(jobs), jobs)
+    assert _python_stages(spark, jobs) == []
+
+
+# Jobs of one weekly batch day at the test SF with empty schema slots
+# (measured): the two delta footer reads (2), the txlog append (1), the
+# CDC sink's commit (feed and target shuffle stages + write: 3), the
+# two t0 snapshot writes (2), the weekly run_daily (the 13 above + the
+# serving-index write, its loads served from the schema slots: 18),
+# the compaction (1), the change feed collected to the driver (3) and
+# the NL answer (2).
+BATCH_DAY_JOB_BUDGET = 32
+
+
+def test_weekly_batch_day_job_budget(spark, sf_dir, tmp_path, jobs_of):
+    """One weekly day of the DAG end to end in one job group: txlog
+    append, CDC sink, t0 snapshots, ``run_daily(weekly=True)``,
+    compaction and the t5 reads. A new eager action anywhere on that
+    path fails here."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_engineering_spark import catalog
+    from data_engineering_spark.functions.nl2sql import run_nl
+    from data_engineering_spark.pipeline.daily import run_daily
+    from data_engineering_spark.sources.txlog import LakeTable
+    from data_engineering_spark.streaming.streams import cdc_upsert_sink
+
+    src, wh = str(tmp_path / "src"), str(tmp_path / "wh")
+    os.makedirs(src)
+    for name in ("orders", "customer", "lineitem", "nation"):
+        shutil.copy(f"{sf_dir}/{name}.parquet", f"{src}/{name}.parquet")
+    orders = pq.read_table(f"{src}/orders.parquet")
+    cust = pq.read_table(f"{src}/customer.parquet")
+    top = pc.max(orders["o_orderkey"]).as_py()
+    day = orders.slice(0, 5).set_column(0, "o_orderkey", [list(range(top + 1, top + 6))])
+    pq.write_table(day, str(tmp_path / "orders_delta.parquet"))
+    keys = cust["c_custkey"].to_pylist()
+    changes = cust.slice(0, 3).set_column(0, "c_custkey", [[keys[0], keys[1], max(keys) + 1]])
+    changes = changes.set_column(
+        changes.schema.get_field_index("c_name"), "c_name", [["renamed", "gone", "new"]]
+    )
+    changes = changes.append_column("op", [["U", "D", "I"]]).append_column("seq", [[1, 2, 3]])
+    pq.write_table(changes, str(tmp_path / "cust_changes.parquet"))
+    orders_lake = LakeTable(spark, str(tmp_path / "lake_orders"))
+    cust_lake = LakeTable(spark, str(tmp_path / "lake_customer"))
+    orders_lake.create(spark.read.parquet(f"{src}/orders.parquet"))
+    cust_lake.create(spark.read.parquet(f"{src}/customer.parquet"))
+    sink = cdc_upsert_sink(cust_lake, ["c_custkey"], app_id="test-day")
+    catalog._SCHEMA_SLOTS.clear()
+
+    def batch_day():
+        read = spark.read.parquet
+        orders_lake.append(read(str(tmp_path / "orders_delta.parquet")))
+        sink(read(str(tmp_path / "cust_changes.parquet")), 0)
+        truncate_and_load(orders_lake.scan(), f"{src}/orders.parquet")
+        truncate_and_load(cust_lake.scan(), f"{src}/customer.parquet")
+        recs = run_daily(spark, src, wh, "20240108", weekly=True)
+        orders_lake.compact()
+        v = cust_lake.latest_version()
+        feed = cust_lake.version_changes(v - 1, v, ["c_custkey"]).toPandas()
+        answer = run_nl(spark, src, "count rows in orders where o_totalprice > 1000").toPandas()
+        return recs, feed, answer
+
+    (recs, feed, answer), jobs = jobs_of(batch_day)
+    assert [r.success_yn for r in recs] == ["Y"] * 4
+    assert sorted(feed.change) == ["added", "changed", "removed"]
+    assert answer.iloc[0, 0] > 0
+    assert len(orders_lake.files()) == 1
+    assert 0 < len(jobs) <= BATCH_DAY_JOB_BUDGET, (len(jobs), jobs)
+    assert _python_stages(spark, jobs) == []
+
+
+def test_run_daily_failed_tier_keeps_earlier_audit_rows(spark, sf_dir, tmp_path, monkeypatch):
+    """A tier that raises propagates out of ``run_daily``, and the one
+    audit append still lands the rows of the tiers before it."""
+    from data_engineering_spark.pipeline import daily
+
+    def failing_write(*_args, **_kwargs):
+        raise RuntimeError("t2 write failed")
+
+    monkeypatch.setattr(daily, "partition_overwrite", failing_write)
+    wh = str(tmp_path / "wh")
+    with pytest.raises(RuntimeError, match="t2 write failed"):
+        daily.run_daily(spark, sf_dir, wh, "20240110")
+    files = [f for f in os.listdir(f"{wh}/audit_log") if f.endswith(".parquet")]
+    assert len(files) == 1, files
+    rows = spark.read.parquet(f"{wh}/audit_log").collect()
+    assert sorted((r.job_nm, r.success_yn) for r in rows) == [
+        ("t1.t1_lineitem_daily", "Y"),
+        ("t1.t1_order_summary", "Y"),
+    ]

@@ -155,7 +155,7 @@ def test_shuffle_budgets(spark, sf_dir):
         "tpch_q21_waiting_suppliers": 2,  # one orderkey window + name agg
         "tpch_q22_global_sales_opportunity": 2,  # anti join + segment agg
         "m1_merge_upsert": 2,             # full-outer merge: one per side
-        "m2_cdc_apply": 3,                # window collapse + anti + merge
+        "m2_cdc_apply": 2,                # latest-wins window + one full-outer join
         "m3_scd2_dimension": 4,           # current-row compare + 3 union arms
         "prof_orders_profile": 2,         # ONE agg pass (expand) + explode
         "dq_expectations": 6,             # 4 rules, each a tiny aggregate

@@ -66,14 +66,20 @@ def test_string_and_filter_semantics(spark, table):
     assert table.scan(filters=[("tag", "=", "b")]).count() == 100
 
 
-def test_compact_single_commit(spark, table):
+def test_compact_single_commit(spark, table, jobs_of):
+    """Compaction coalesces the live set in one commit: one write job of
+    one stage (no Exchange), at most ``target_partitions`` files."""
     for lo in (100, 200, 300):
         table.append(_r(spark, lo, lo + 100).coalesce(1))
     pre_version = table.latest_version()
     assert len(table.files()) == 4
-    table.compact(target_partitions=1)
+    _, jobs = jobs_of(lambda: table.compact(target_partitions=1))
+    assert len(jobs) == 1, jobs
+    assert spark.sparkContext._jsc.sc().statusStore().job(jobs[0]).stageIds().size() == 1
     assert len(table.files()) == 1
     assert table.scan().count() == 400
+    table.compact(target_partitions=8)  # one live file: no more than one
+    assert len(table.files()) == 1
     # history intact: pre-compaction snapshot still resolves to 4 files
     assert len(table.files(version=pre_version)) == 4
     assert table.scan(version=pre_version).count() == 400
